@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Eager distributed materialization — the seam behind every "compute this
   * intermediate exactly once, keep it partitioned on the cluster" site
@@ -137,19 +138,18 @@ object Materialize {
     * round-18 scaling block measured most spread-heavy queries FASTER at
     * 8 cores than 32) and the guard never fires on a well-split corpus,
     * so production plans are unchanged. Unknown sizes (non-file inputs)
-    * keep the old full-width behavior. Overridable per-process for
-    * experiments, never consulted at real scale (the underSplit guard
-    * fires only when row groups < cores/2). */
-  private[graft] val SpreadBytesPerPart: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD_BYTES_PER_PART", "65536").toLong
+    * keep the old full-width behavior. */
+  private[graft] val SpreadBytesPerPart: Long = 65536L
 
-  private[graft] def spreadWidth(df: DataFrame): Int = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = inputBytes(df)
+  private[graft] def spreadWidth(df: DataFrame): Int =
+    spreadWidth(df.sparkSession.sparkContext.defaultParallelism, inputBytes(df))
+
+  /** The width for `bytes` of input (≤ 0 = unknown) on `cores` cores: the
+    * floor of 4 never lifts it past the core count. */
+  private[graft] def spreadWidth(cores: Int, bytes: Long): Int =
     if (bytes <= 0) cores
-    else math.max(4, math.min(cores,
+    else math.min(cores, math.max(4,
       ((bytes + SpreadBytesPerPart - 1) / SpreadBytesPerPart).toInt))
-  }
 
   private def inputBytes(df: DataFrame): Long =
     try {
@@ -158,7 +158,7 @@ object Materialize {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   private def underSplit(df: DataFrame): Boolean = {
     val s = df.sparkSession
@@ -179,7 +179,7 @@ object Materialize {
         s.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getFooter.getBlocks.size finally r.close()
-    } catch { case _: Throwable => Int.MaxValue } // unreadable ⇒ do not rebalance
+    } catch { case NonFatal(_) => Int.MaxValue } // unreadable ⇒ do not rebalance
 
   // Lazily-shared frames (persist, no action) — drained by releaseTransient.
   private val sharedFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

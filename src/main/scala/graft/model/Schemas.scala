@@ -62,11 +62,12 @@ object Schemas {
 
   /** Debezium envelope carried on the Kafka topic: {"payload":{"after":{...}}}
     * with start_datetime in epoch-MICROseconds (ref: SaveDelta.scala:140-147;
-    * slack_notification.py:119-124; FIXTURES.md A5). Only `after` is modeled —
-    * the reference drops every non-insert envelope via the id-not-null filter
-    * (SURVEY §7.4 risk 7). */
+    * slack_notification.py:119-124; FIXTURES.md A5). `op` and `after` are
+    * modeled — ingest keeps creates only (SURVEY §7.4 risk 7): updates drop
+    * by `op`, deletes and tombstones by the id-not-null filter. */
   val envelopeSchema: StructType = StructType(Seq(
     StructField("payload", StructType(Seq(
+      StructField("op", StringType),
       StructField("after", StructType(Seq(
         StructField("id", IntegerType),
         StructField("id_employee", IntegerType),

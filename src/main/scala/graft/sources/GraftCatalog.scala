@@ -175,7 +175,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     if (!java.nio.file.Files.isDirectory(dir)) return Array.empty
     val s = java.nio.file.Files.list(dir)
     try s.iterator().asScala
-      .filter(p => java.nio.file.Files.isDirectory(p.resolve("_txn_log")))
+      .filter(p => java.nio.file.Files.isDirectory(p.resolve("_delta_log")))
       .map(p => Identifier.of(namespace, p.getFileName.toString)).toArray
     finally s.close()
   }
@@ -239,11 +239,11 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     new GraftTable(root, TxnTable.latestVersion(root), ident.toString)
   }
 
-  /** DROP TABLE — a guarded METADATA tombstone: the commit-log directories
-    * rename aside (`_txn_log.dropped-<ts>`), so the identifier stops
+  /** DROP TABLE — a guarded METADATA tombstone: the commit log renames
+    * aside (`_delta_log.dropped-<ts>`), so the identifier stops
     * resolving and CREATE can reclaim the name, but not one data byte is
     * deleted (a later vacuum of a re-created table sweeps the orphans, or
-    * an operator restores by renaming the logs back). Refused unless the
+    * an operator restores by renaming the log back). Refused unless the
     * session opts in with `graft.catalog.allowDrop = true` — an
     * accidental DROP against a 100 TB table should be impossible by
     * default. */
@@ -256,18 +256,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     val root = try rootFor(ident) catch { case _: RuntimeException => return false }
     if (latestRecovered(root) < 0) return false // recovery-aware: DROP
     // after a crashed REPLACE tombstones the promoted table, not a void
-    val stamp = System.currentTimeMillis()
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    // the MIRROR tombstones first: `_txn_log` is the existence authority
-    // (latestVersion), so a failure between the two moves leaves a table
-    // that still fully resolves (mirror missing — rebuildable derived
-    // state), never a name that CREATE would reclaim on top of a stale
-    // `_delta_log` mixing two tables' mirror histories.
-    Seq("_delta_log", "_txn_log").foreach { d =>
-      val p = JPaths.get(root, d)
-      if (JFiles.isDirectory(p))
-        JFiles.move(p, JPaths.get(root, s"$d.dropped-$stamp"))
-    }
+    java.nio.file.Files.move(java.nio.file.Paths.get(root, "_delta_log"),
+      java.nio.file.Paths.get(root, s"_delta_log.dropped-${System.currentTimeMillis()}"))
     true
   }
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =

@@ -725,8 +725,8 @@ object Sources {
 
   // ---------------------------------------------------------------------------
   // Oracle-gated PARTITIONED table: events land hive-partitioned by
-  // event_type (partitionValues recorded per add action, custom log +
-  // Delta mirror), then a partition-equality + cents-range read goes
+  // event_type (partitionValues recorded per add action in the
+  // `_delta_log`), then a partition-equality + cents-range read goes
   // through readWhere — the partition conjunct prunes whole directories by
   // metadata fold, the range conjunct prunes the survivors by footer
   // stats. The oracle is the plain WHERE; TxnTableSpec gates the pruning.
@@ -1178,7 +1178,7 @@ object Sources {
   // data file is rewritten at any point — v1/v2 cost one roaring-bitmap
   // sidecar each — yet every read filters the marked rows exactly. The
   // oracle replays the same row algebra with plain WHEREs; DvTableSpec
-  // gates the no-rewrite property, the mirror descriptors, and the
+  // gates the no-rewrite property, the log descriptors, and the
   // checkpoint/vacuum lifecycle.
   // ---------------------------------------------------------------------------
   def txnDv(s: SparkSession, dir: String): DataFrame = {
@@ -1227,7 +1227,7 @@ object Sources {
   // new-logical files into one seamless column at every version; time
   // travel below the rename keeps the old name (v0 aggregates `cents`).
   // ColumnMappingSpec gates the no-rewrite property, pruning through the
-  // name map, and the mirror's mapping metadata/protocol.
+  // name map, and the log's mapping metadata/protocol.
   // ---------------------------------------------------------------------------
   def txnRename(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1378,7 +1378,7 @@ object Sources {
   // because the table type is now wide. Reads at every version must agree
   // with the oracle's replay; time travel below the widen keeps INT (the
   // v0/v1 frames aggregate the narrow column). TxnWidenSpec gates the
-  // no-rewrite property, the refusal matrix, and the mirror feature.
+  // no-rewrite property, the refusal matrix, and the log's feature.
   // ---------------------------------------------------------------------------
   def txnWiden(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

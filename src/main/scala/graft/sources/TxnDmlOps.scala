@@ -26,7 +26,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
   def delete(spark: SparkSession, root: String, pred: Column,
              cdf: Boolean = false): Long = casRetry("delete") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val meta = readMeta(root)
     val pcs = meta.map(_._2).getOrElse(Seq.empty)
     val adds = liveAdds(root, v - 1)
@@ -48,7 +48,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
           // `_file isin` filter over the candidate scan compared a derived
           // metadata string per row and could prune nothing — every
           // candidate file was re-read to rewrite the touched subset
-          val byFile = candidates.map(a => (a.file, a)).toMap
+          val byFile = addIndex(root, candidates)
           val inTouched = readFilesTagged(spark, root,
             touched.map(byFile), v - 1)
           val carried = inTouched
@@ -96,7 +96,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
     * surviving rows, numRecords becomes an upper bound — pruning remains
     * sound. The commit removes and re-adds the SAME path; the fold lands
     * on the re-add (removes order before adds). First use records
-    * `delta.enableDeletionVectors=true` and upgrades the mirror protocol
+    * `delta.enableDeletionVectors=true` and upgrades the log protocol
     * to reader 3 / writer 7 with the deletionVectors feature, per the
     * public Delta protocol. `cdf = true` additionally persists the
     * deleted rows as change-data files for the incremental feed. */
@@ -142,7 +142,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
                cdf: Boolean = false,
                driverDvBudgetBytes: Long = DvDriverBudgetBytes): Long = casRetry("deleteDv") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val meta = readMeta(root)
     val pcs = meta.map(_._2).getOrElse(Seq.empty)
     val adds = liveAdds(root, v - 1)
@@ -159,7 +159,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
         val perFile = collectDvBlobs(matched, "deleteDv", driverDvBudgetBytes)
         if (perFile.isEmpty) false
         else {
-          val byFile = candidates.map(a => (a.file, a)).toMap
+          val byFile = addIndex(root, candidates)
           val merged = perFile.sortBy(_._1).map { case (f, blob, _) =>
             val bm = DeletionVectors.RoaringBitmapArray.deserialize(blob)
             val a = byFile(f)
@@ -222,7 +222,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
              set: Map[String, Column], cdf: Boolean = false): Long = casRetry("update") {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val meta = readMeta(root)
     val pcs = meta.map(_._2).getOrElse(Seq.empty)
     set.keys.foreach(c => require(!pcs.contains(c),
@@ -243,7 +243,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
         if (touched.isEmpty) Seq.empty[String]
         else {
           // touched-only rewrite read — see [[delete]] (round 19)
-          val byFile = candidates.map(a => (a.file, a)).toMap
+          val byFile = addIndex(root, candidates)
           val inTouched = readFilesTagged(spark, root,
             touched.map(byFile), v - 1)
             .drop("_file")
@@ -298,7 +298,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
     require(rewriteFraction > 0 && rewriteFraction <= 1,
       s"rewriteFraction must be in (0,1], got $rewriteFraction")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val meta = readMeta(root)
     val pcs = meta.map(_._2).getOrElse(Seq.empty)
     set.keys.foreach(c => require(!pcs.contains(c),
@@ -321,7 +321,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
           "updateDv", driverDvBudgetBytes).sortBy(_._1)
         if (perFile.isEmpty) false
         else {
-          val byFile = candidates.map(a => (a.file, a)).toMap
+          val byFile = addIndex(root, candidates)
           val (dvSide, cowSide) = perFile.partition { case (f, _, card) =>
             val a = byFile(f)
             val old = a.dv.map(_.cardinality).getOrElse(0L)

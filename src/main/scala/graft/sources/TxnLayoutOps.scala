@@ -59,7 +59,7 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
     require(minDeletedFraction > 0 && minDeletedFraction <= 1,
       s"minDeletedFraction must be in (0,1], got $minDeletedFraction")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val pcs = readMeta(root).map(_._2).getOrElse(Seq.empty)
     val heavy = liveAdds(root, v - 1).filter { a =>
       a.dv.exists { d =>
@@ -141,7 +141,7 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
                     cols: Seq[String], bits: Int = 16): Long = casRetry("setClustering") {
     require(cols.nonEmpty, "setClustering needs at least one column")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to cluster"))
     cols.foreach { c =>
@@ -179,7 +179,7 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
   def optimizeCluster(spark: SparkSession, root: String,
                       targetPartitions: Int = 1): Long = casRetry("optimizeCluster") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val zCols = clusteringColumns(root)
     require(zCols.nonEmpty,
       s"$root has no clustering columns (declare them with setClustering)")
@@ -232,7 +232,7 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
     // change-data files age with their commit: a CDF range read reaches
     // only retained versions, so cdc files of vacuumed-away versions go too
     val cdcVictims = versions(root).filter(_ < firstKept)
-      .flatMap(v => parseLog(root, v).collect {
+      .flatMap(v => readCommit(root, v).actions.collect {
         case Action(_, _, "cdc", a) => a.file })
     // absolute entries are a shallow clone's references INTO its source —
     // vacuum through the clone must never reclaim the source's bytes
@@ -298,8 +298,7 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
     *    first move leaves one). Reclaimed past retention: a live commit's
     *    marker is milliseconds old.
     *  - `<root>.__replaced-<ts>` — an RTAS-tombstoned predecessor, and
-    *    `_txn_log.dropped-<ts>` / `_delta_log.dropped-<ts>` inside the
-    *    root — DROP tombstones. REPORTED with sizes, never deleted: they
+    *    `_delta_log.dropped-<ts>` inside the root — DROP tombstones. REPORTED with sizes, never deleted: they
     *    are the restore path, and reclaiming them is an operator decision
     *    (delete the reported paths directly once certain).
     *
@@ -361,54 +360,33 @@ private[sources] trait TxnLayoutOps { self: TxnTable.type =>
         Some(SweepEntry("replace-intent-tmp", p.toString, b, old))
       } else None
     }
-    val droppedEntries = Seq("_txn_log", "_delta_log").flatMap { d =>
+    val droppedEntries =
       if (!Files.isDirectory(rootPath)) Seq.empty[SweepEntry]
       else listClosed(rootPath).iterator().asScala
-        .filter(_.getFileName.toString.startsWith(s"$d.dropped-"))
+        .filter(_.getFileName.toString.startsWith("_delta_log.dropped-"))
         .map(p => SweepEntry("dropped", p.toString, bytesOf(p),
           reclaimed = false)).toSeq
-    }
     (sibEntries ++ droppedEntries).sortBy(e => (e.kind, e.path))
   }
 
-  /** EXPIRE the log below the newest `_txn_log` checkpoint — the
-    * bounded-metadata half of the lifecycle (VACUUM bounds data files,
-    * this bounds commit files; Delta's log-retention analogue). Deletes
-    * every commit file, old checkpoint, and mirror JSON below it. Reads
-    * at or above the checkpoint are unaffected (they seed from it —
-    * including the appendOnce token ledger and the table schema); time
-    * travel below it fails loudly afterwards, like vacuumed versions.
-    * Mirror JSONs are expired only when the mirror's own checkpoint
-    * parquet exists at that version, so an external reader always keeps a
-    * complete fold. Run [[vacuum]] for the expired versions'
-    * now-unreferenced data files. */
+  /** EXPIRE the log below the newest checkpoint — the bounded-metadata
+    * half of the lifecycle (VACUUM bounds data files, this bounds commit
+    * files; Delta's log-retention analogue). Deletes every commit JSON and
+    * older checkpoint below it. Reads at or above the checkpoint are
+    * unaffected (they seed from it — including the idempotence ledger and
+    * the table schema, for this module and external readers alike); time
+    * travel and history below it fail loudly afterwards, like vacuumed
+    * versions. Run [[vacuum]] for the expired versions' now-unreferenced
+    * data files. */
   def expireLog(root: String): Seq[String] = {
-    val cv = ckptVersions(root).lastOption.getOrElse(sys.error(
+    val (jsons, cps) = logListing(root)
+    val cv = cps.lastOption.getOrElse(sys.error(
       s"$root has no checkpoint yet (one lands every $CheckpointInterval commits)"))
-    val victims = Seq.newBuilder[String]
-    versions(root).filter(_ < cv).foreach { v =>
-      Files.delete(logDir(root).resolve(f"$v%020d.json"))
-      victims += f"_txn_log/$v%020d.json"
+    (jsons.filter(_ < cv).map(commitPath(root, _)) ++
+      cps.filter(_ < cv).map(checkpointPath(root, _))).map { p =>
+      Files.delete(p)
+      s"_delta_log/${p.getFileName}"
     }
-    ckptVersions(root).filter(_ < cv).foreach { v =>
-      Files.delete(ckptPath(root, v))
-      victims += f"_txn_log/$v%020d.ckpt"
-    }
-    val mirrorCp = deltaDir(root).resolve(f"$cv%020d.checkpoint.parquet")
-    if (Files.exists(mirrorCp)) {
-      val d = deltaDir(root)
-      listClosed(d).iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          (n.endsWith(".json") && n.stripSuffix(".json").toLong < cv) ||
-            (n.endsWith(".checkpoint.parquet") &&
-              n.stripSuffix(".checkpoint.parquet").toLong < cv)
-        }.toSeq.foreach { p =>
-          Files.delete(p)
-          victims += s"_delta_log/${p.getFileName}"
-        }
-    }
-    victims.result()
   }
 
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction => UFn}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -11,18 +11,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** [[TxnTable]] concern module — the LOG LAYER: commit mechanics (atomic
-  * version claim, token ledger, row-id stamping), checkpoints, the
-  * `_delta_log` protocol mirror, per-file footer statistics, and the
-  * data/cdc file writers. Everything here is O(files) driver metadata or
-  * a distributed write job. */
+/** [[TxnTable]] concern module — the LOG LAYER: the `_delta_log` commit
+  * (atomic version claim, token ledger, row-id stamping), the ONE fold of
+  * its actions into a [[Snapshot]], parquet checkpoints, per-file footer
+  * statistics, and the data/cdc file writers. Everything here is O(files)
+  * driver metadata or a distributed write job. */
 private[sources] trait TxnLogOps { self: TxnTable.type =>
-  private[sources] val actionSchema = StructType(Seq(
-    StructField("version", LongType),
-    StructField("op", StringType),
-    StructField("action", StringType), // add | remove
-    StructField("file", StringType),   // path relative to table root
-    StructField("bytes", LongType)))
   private[sources] def decodeStats(json: String): FileStats = {
     val m = MiniJson.parse(json).asInstanceOf[Map[String, Any]]
     FileStats(
@@ -33,7 +27,6 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
         .map { case (k, v) => k -> v.asInstanceOf[BigDecimal].toLongExact })
   }
 
-  private[sources] def logDir(root: String): Path = Paths.get(root, "_txn_log")
   private[sources] def deltaDir(root: String): Path = Paths.get(root, "_delta_log")
 
   /** Files.list with DETERMINISTIC close: the JDK stream holds an open
@@ -67,13 +60,26 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
     if (p.isAbsolute) p else Paths.get(root, f)
   }
 
-  private[sources] def versions(root: String): Seq[Long] = {
-    val d = logDir(root)
-    if (!Files.isDirectory(d)) Seq.empty
-    else listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong).toSeq.sorted
+  private[sources] def commitPath(root: String, v: Long): Path =
+    deltaDir(root).resolve(f"$v%020d.json")
+  private[sources] def checkpointPath(root: String, v: Long): Path =
+    deltaDir(root).resolve(f"$v%020d.checkpoint.parquet")
+
+  /** (commit versions, checkpoint versions), both ascending — one listing
+    * of `_delta_log`. Writers' in-flight tmp files start with a dot. */
+  private[sources] def logListing(root: String): (Seq[Long], Seq[Long]) = {
+    val d = deltaDir(root)
+    if (!Files.isDirectory(d)) (Seq.empty, Seq.empty)
+    else {
+      val names = listClosed(d).iterator().asScala
+        .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq
+      def vs(suffix: String) = names.filter(_.endsWith(suffix))
+        .map(_.stripSuffix(suffix)).filter(_.forall(_.isDigit)).map(_.toLong).sorted
+      (vs(".json"), vs(".checkpoint.parquet"))
+    }
   }
+
+  private[sources] def versions(root: String): Seq[Long] = logListing(root)._1
 
   /** Latest committed version, −1 for an empty/new table. */
   def latestVersion(root: String): Long = versions(root).lastOption.getOrElse(-1L)
@@ -81,46 +87,40 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
   private[sources] def esc(s: String): String =
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
 
-  /** Write one commit atomically: actions → tmp json → rename into place.
-    * After the `_txn_log` rename lands (the commit point), the same commit
-    * is mirrored as a public Delta-protocol `_delta_log/<v>.json` entry —
-    * see [[deltaCommit]]. */
-  /** One add action as a log line. stats/partitionValues/bloom ride
-    * base64-encoded so nested-JSON quoting never leaks into the line
-    * grammar; the `_delta_log` mirror carries the same payloads in the
-    * protocol's native form. Shared by [[commit]] and the `_txn_log`
-    * checkpoint writer, so a checkpointed add re-parses identically. */
-  private[sources] def addLine(version: Long, op: String, a: AddFile): String = {
-    def b64(s: String): String =
-      java.util.Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
-    val partJson = a.partitionValues.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s""""${MiniJson.escape(k)}":"${MiniJson.escape(v)}"""" }
-      .mkString("{", ",", "}")
-    val stField = a.stats.map(j => s""","stats64":"${b64(j)}"""").getOrElse("")
-    val pField = if (a.partitionValues.isEmpty) ""
-      else s""","part64":"${b64(partJson)}""""
-    val bField = a.bloom.map(j => s""","bloom64":"${b64(j)}"""").getOrElse("")
-    val dField = a.dv.map(d => s""","dv64":"${b64(dvJson(d))}"""").getOrElse("")
-    val rField = a.baseRowId.map(r => s""","baseRowId":$r""").getOrElse("")
-    s"""{"version":$version,"op":"${esc(op)}","action":"add","file":"${esc(a.file)}","bytes":${a.bytes}$stField$pField$bField$dField$rField}"""
-  }
-
-  /** Spec-shaped deletionVector descriptor JSON (identical bytes in the
-    * internal log's dv64 payload and the `_delta_log` mirror). */
+  /** Spec-shaped deletionVector descriptor JSON. */
   private[sources] def dvJson(d: DeletionVectors.DvDescriptor): String =
     s"""{"storageType":"${esc(d.storageType)}","pathOrInlineDv":"${esc(d.pathOrInlineDv)}","offset":${d.offset},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
 
-  private[sources] def parseDvJson(j: String): DeletionVectors.DvDescriptor = {
-    val m = MiniJson.parse(j).asInstanceOf[Map[String, Any]]
+  private[sources] def dvOf(m: Map[String, Any]): DeletionVectors.DvDescriptor =
     DeletionVectors.DvDescriptor(
       m("storageType").asInstanceOf[String],
       m("pathOrInlineDv").asInstanceOf[String],
       m.get("offset").map(_.asInstanceOf[BigDecimal].toIntExact).getOrElse(0),
       m("sizeInBytes").asInstanceOf[BigDecimal].toIntExact,
       m("cardinality").asInstanceOf[BigDecimal].toLongExact)
-  }
 
+  // ---- the commit ------------------------------------------------------------
+
+  /** Write one version of the OPEN Delta transaction protocol (delta.io
+    * PROTOCOL.md) — newline-delimited JSON actions in
+    * `_delta_log/%020d.json`, the table's one log. The whole commit is
+    * written to a writer-unique tmp file first, then published iff the
+    * version is unclaimed: that claim IS the commit point, so a crash can
+    * only leave a version wholly present or wholly absent. The claim goes
+    * through the [[CommitLock]] seam — a hard link by default (link(2)
+    * fails if the target exists, where rename(2) silently REPLACES — the
+    * classic lost-commit race), the conditional-put lease protocol under
+    * `graft.commit.lock=lease` on S3-class stores.
+    *
+    * Version 0 carries `protocol` and `metaData` with the Spark schema JSON
+    * as `schemaString` (the Delta schema serialization IS the StructType
+    * JSON shape). Data files stay where the writers put them — `add.path`
+    * is root-relative with subdirectories, which the protocol allows.
+    * Layout commits carry `dataChange:false` so downstream streams skip
+    * them; idempotent writes carry the `txn` action that keys the dedup
+    * ledger. External readers (delta-spark, DuckDB delta, Trino) fold the
+    * same actions [[snapshot]] folds — DeltaLogSpec proves it version by
+    * version. */
   private[sources] def commit(root: String, version: Long, op: String,
                      adds: Seq[AddFile], removes: Seq[String],
                      schemaJson: Option[String] = None,
@@ -130,244 +130,36 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
                      cdc: Seq[AddFile] = Nil,
                      extraConfig: Option[Map[String, String]] = None,
                      removeDvs: Map[String, DeletionVectors.DvDescriptor] = Map.empty): Unit = {
-    Files.createDirectories(logDir(root))
+    val prior = if (version == 0L) Snapshot.empty else snapshot(root, version - 1)
+    // configuration survives re-emission: a schema evolution must not drop
+    // the table's constraints
+    val config = extraConfig.getOrElse(prior.config)
     // ROW TRACKING: when enabled (possibly by THIS commit's extraConfig),
     // every not-yet-stamped add gets a fresh baseRowId block off the
     // folded high-water mark, and the commit records the advanced mark.
     // Re-adds (DV commits, restore, clone) arrive pre-stamped and keep
     // their ids — that is the stability contract.
-    val effCfg = extraConfig.getOrElse(readTableConfig(root))
-    val (stamped, hwmOpt) =
-      if (adds.isEmpty || !effCfg.get("delta.enableRowTracking").contains("true"))
+    val (stamped, hwm) =
+      if (adds.isEmpty || !config.get("delta.enableRowTracking").contains("true"))
         (adds, None)
       else {
-        val prior = foldState(root, version - 1).hwm
         // pre-stamped adds (re-adds, a CLONE's inherited ids) first raise
         // the mark — fresh blocks must never collide with ids that arrived
-        // stamped from a log this table's own hwm lines never covered
+        // stamped from a log this table's own mark never covered
         val preMax = adds.flatMap(a => a.baseRowId.map(_ +
           math.max(a.stats.map(decodeStats(_).numRecords).getOrElse(0L), 1L)))
           .maxOption.getOrElse(0L)
-        var hwm = math.max(prior, preMax)
+        var next = math.max(prior.hwm, preMax)
         val out = adds.map { a =>
           if (a.baseRowId.isDefined) a
           else {
             val n = a.stats.map(decodeStats(_).numRecords).getOrElse(sys.error(
               s"row tracking needs per-file stats; ${a.file} has none"))
-            val s = a.copy(baseRowId = Some(hwm)); hwm += math.max(n, 1L); s
+            val s = a.copy(baseRowId = Some(next)); next += math.max(n, 1L); s
           }
         }
-        (out, if (hwm > prior) Some(hwm) else None)
+        (out, if (next > prior.hwm) Some(next) else None)
       }
-    // removes BEFORE adds (the mirror's order too): a merge-on-read commit
-    // removes and re-adds the SAME path (new deletion vector), and the
-    // line-ordered fold must land on the re-add. A remove of a DV-carrying
-    // instance names the descriptor it tombstones — strict protocol
-    // readers reconcile adds/removes by (path, dvId), not path alone.
-    val lines =
-      removes.map { f =>
-        val dField = removeDvs.get(f)
-          .map(d => s""","dv64":"${java.util.Base64.getEncoder.encodeToString(dvJson(d).getBytes(UTF_8))}"""")
-          .getOrElse("")
-        s"""{"version":$version,"op":"${esc(op)}","action":"remove","file":"${esc(f)}","bytes":0$dField}"""
-      } ++ stamped.map(addLine(version, op, _)) ++ cdc.map { a =>
-        s"""{"version":$version,"op":"${esc(op)}","action":"cdc","file":"${esc(a.file)}","bytes":${a.bytes}}"""
-      } ++ hwmOpt.map(h =>
-        s"""{"version":$version,"op":"hwm","action":"hwm","file":"","bytes":$h}""").toSeq
-    // version claim is a true compare-and-set behind the [[CommitLock]]
-    // seam: the content is fully written to a writer-private tmp file,
-    // then atomically published iff the version is unclaimed. The default
-    // is a hard link (link(2) fails if the target exists, where rename(2)
-    // silently REPLACES — the classic lost-commit race); on S3-class
-    // stores `graft.commit.lock=lease` swaps in the conditional-put lease
-    // protocol without touching anything above this line.
-    val tmp = logDir(root).resolve(
-      s".$version-${java.util.UUID.randomUUID().toString.take(8)}.json.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(UTF_8))
-    val dst = logDir(root).resolve(f"$version%020d.json")
-    if (!CommitLock.active.claim(dst, tmp))
-      throw new ConcurrentCommitException(root, version)
-    deltaCommit(root, version, op, stamped, removes, schemaJson, dataChange, txn,
-      partCols, cdc, extraConfig, removeDvs, hwmOpt)
-    if (version > 0 && version % CheckpointInterval == 0)
-      writeTxnCheckpoint(root, version)
-  }
-
-  // ---- _txn_log checkpoints -------------------------------------------------
-  // The same O(versions) critique the Delta mirror faced applies to this
-  // module's OWN fold: without a checkpoint, every snapshot read parses
-  // every commit file since version 0 — at 100k commits the log, not the
-  // data, becomes the read bottleneck. Every CheckpointInterval commits
-  // the winner writes `<v>.ckpt`: the full fold state at v (live adds
-  // with their stats/bloom payloads, the idempotent-append token ledger,
-  // the current schema + partition columns), so any read at asOf ≥ some
-  // checkpoint folds ONE checkpoint + the tail. Older time travel still
-  // folds from the nearest earlier checkpoint (or 0). Checkpoints are
-  // derived state — deleting one only slows reads, never changes them.
-
-  private[sources] def ckptPath(root: String, v: Long): Path =
-    logDir(root).resolve(f"$v%020d.ckpt")
-
-  private[sources] def ckptVersions(root: String): Seq[Long] = {
-    val d = logDir(root)
-    if (!Files.isDirectory(d)) Seq.empty
-    else listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".ckpt"))
-      .map(_.stripSuffix(".ckpt").toLong).toSeq.sorted
-  }
-
-  /** Ops carrying an idempotence token in the dedup ledger: tagged
-    * appends ([[appendOnce]]) and tagged merges ([[mergeDvOnce]]). */
-  private[sources] def tokenOp(op: String): Boolean =
-    op.startsWith("append#") || op.startsWith("merge-dv#")
-
-  /** The complete fold at one version: live adds, the idempotence-token
-    * ledger, and the row-id high-water mark (next fresh row id; 0 when
-    * row tracking never assigned any). */
-  private[sources] final case class FoldedState(live: Seq[AddFile],
-                                       tokens: Map[String, Long], hwm: Long)
-
-  /** Fold state at `upTo` — seeds from the newest checkpoint ≤ upTo, then
-    * folds only the tail. `hwm` lines ride `bytes` (a file-less marker
-    * action, like token lines): the high-water mark must survive
-    * [[expireLog]] and vacuumed history, or freed ids would be REUSED and
-    * break row-id stability — so it folds as a max, never recomputed from
-    * the (possibly truncated) add set. */
-  private[sources] def foldState(root: String, upTo: Long): FoldedState = {
-    val ck = ckptVersions(root).filter(_ <= upTo).lastOption
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    val tokens = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    var hwm = 0L
-    ck.foreach { v =>
-      Files.readAllLines(ckptPath(root, v)).asScala.foreach { line =>
-        val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]
-        m("action").asInstanceOf[String] match {
-          case "add" =>
-            val a = parseAddFields(m)
-            live(a.file) = a
-          case "token" =>
-            tokens(m("op").asInstanceOf[String]) =
-              m("version").asInstanceOf[BigDecimal].toLongExact
-          case "hwm" =>
-            hwm = math.max(hwm, m("bytes").asInstanceOf[BigDecimal].toLongExact)
-          case _ => () // meta — consumed by readMeta's short-circuit
-        }
-      }
-    }
-    versions(root).filter(v => v > ck.getOrElse(-1L) && v <= upTo)
-      .foreach { v =>
-        parseLog(root, v).foreach {
-          case Action(_, op, "add", a) =>
-            live(a.file) = a
-            if (tokenOp(op)) tokens(op) = v
-          case Action(_, op, "remove", a) =>
-            live.remove(a.file)
-            if (tokenOp(op)) tokens(op) = v
-          case Action(_, _, "hwm", a) =>
-            hwm = math.max(hwm, a.bytes)
-          case _ => ()
-        }
-      }
-    FoldedState(live.values.toSeq, tokens.toMap, hwm)
-  }
-
-  /** (checkpoint version used, tail commit files folded) for a read at
-    * `asOf` — the observability hook the checkpoint spec gates on. */
-  private[graft] def foldReport(root: String, asOf: Long = -1L): (Option[Long], Int) = {
-    val upTo = if (asOf < 0) latestVersion(root) else asOf
-    val ck = ckptVersions(root).filter(_ <= upTo).lastOption
-    (ck, versions(root).count(v => v > ck.getOrElse(-1L) && v <= upTo))
-  }
-
-  private[sources] def writeTxnCheckpoint(root: String, version: Long): Unit = {
-    val st = foldState(root, version)
-    val (live, tokens) = (st.live, st.tokens)
-    val metaLine = readMeta(root, version).map { case (schema, pcs) =>
-      def b64(s: String) =
-        java.util.Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
-      val s64 = b64(schema.json)
-      val p64 = b64(pcs.map(c => s""""${MiniJson.escape(c)}"""")
-        .mkString("[", ",", "]"))
-      val c64 = b64(readTableConfig(root).toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          s""""${MiniJson.escape(k)}":"${MiniJson.escape(v)}"""" }
-        .mkString("{", ",", "}"))
-      s"""{"version":$version,"op":"meta","action":"meta","file":"","bytes":0,"schema64":"$s64","parts64":"$p64","config64":"$c64"}"""
-    }.toSeq
-    val lines = metaLine ++
-      live.map(addLine(version, "checkpoint", _)) ++
-      tokens.toSeq.sortBy(_._2).map { case (op, v) =>
-        s"""{"version":$v,"op":"${esc(op)}","action":"token","file":"","bytes":0}""" } ++
-      (if (st.hwm > 0)
-        Seq(s"""{"version":$version,"op":"hwm","action":"hwm","file":"","bytes":${st.hwm}}""")
-      else Seq.empty)
-    val tmp = logDir(root).resolve(
-      s".$version-${java.util.UUID.randomUUID().toString.take(8)}.ckpt.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(UTF_8))
-    // derived state: lose the race, keep the winner's (identical) fold —
-    // same claim seam as commits, outcome simply ignored
-    CommitLock.active.claim(ckptPath(root, version), tmp)
-  }
-
-  /** Decode the AddFile fields of a parsed add-action line. */
-  private[sources] def parseAddFields(m: Map[String, Any]): AddFile = {
-    def b64(k: String): Option[String] = m.get(k).map(s =>
-      new String(java.util.Base64.getDecoder.decode(s.asInstanceOf[String]), UTF_8))
-    val pvs = b64("part64").map(j =>
-      MiniJson.parse(j).asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[String] })
-      .getOrElse(Map.empty[String, String])
-    AddFile(m("file").asInstanceOf[String],
-      m("bytes").asInstanceOf[BigDecimal].toLongExact,
-      b64("stats64"), pvs, b64("bloom64"),
-      b64("dv64").map(parseDvJson),
-      m.get("baseRowId").map(_.asInstanceOf[BigDecimal].toLongExact))
-  }
-  /** Re-run `body` (which recomputes latest+1 and its snapshot basis each
-    * attempt) until its commit wins the version CAS. Orphaned data files a
-    * losing attempt wrote are unreferenced by any log entry, invisible to
-    * readers, and reclaimed by [[vacuum]] — the same garbage story as the
-    * open formats. */
-  private[sources] def casRetry[T](what: String)(body: => T): T = {
-    var attempts = 0
-    while (true) {
-      try return body
-      catch { case _: ConcurrentCommitException =>
-        attempts += 1
-        require(attempts < 64, s"$what lost the commit race $attempts times")
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Deterministic table id for the Delta metaData action (stable across
-    * commits; derived from the table root, not wall-clock). */
-  private[sources] def tableId(root: String): String =
-    java.util.UUID.nameUUIDFromBytes(("graft-txn:" + root).getBytes(UTF_8)).toString
-
-  /** Mirror a committed version into the OPEN Delta transaction protocol
-    * (delta.io PROTOCOL.md): newline-delimited JSON actions in
-    * `_delta_log/%020d.json`. Version 0 carries `protocol` (reader 1 /
-    * writer 2 — no advanced table features used) and `metaData` with the
-    * Spark schema JSON as `schemaString` (the Delta schema serialization IS
-    * the Spark StructType JSON shape). Data files stay where [[commit]] put
-    * them — `add.path` is root-relative with subdirectories, which the
-    * protocol allows. OPTIMIZE commits carry `dataChange:false` so
-    * downstream streams skip them; idempotent appends carry the `txn`
-    * action with the dedup token as `appId`. Writing the format needs no
-    * jar; external readers (delta-spark, DuckDB delta, Trino) fold the
-    * same actions this module's `_txn_log` fold uses, so snapshots agree —
-    * DeltaLogSpec proves the fold equivalence version by version. */
-  private[sources] def deltaCommit(root: String, version: Long, op: String,
-                          adds: Seq[AddFile], removes: Seq[String],
-                          schemaJson: Option[String], dataChange: Boolean,
-                          txn: Option[(String, Long)],
-                          partCols: Seq[String] = Nil,
-                          cdc: Seq[AddFile] = Nil,
-                          extraConfig: Option[Map[String, String]] = None,
-                          removeDvs: Map[String, DeletionVectors.DvDescriptor] = Map.empty,
-                          hwm: Option[Long] = None): Unit = {
-    Files.createDirectories(deltaDir(root))
     // MONOTONIC commit timestamps (Delta's inCommitTimestamp semantics):
     // timestampAsOf time travel scans commitInfo stamps newest-first and
     // early-exits on the first hit — a wall clock that regressed between
@@ -378,20 +170,16 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
       val wall = System.currentTimeMillis()
       if (version == 0L) wall
       else try math.max(wall, commitTimestamp(root, version - 1) + 1)
-      catch { case _: Exception => wall } // prior mirror expired: keep wall
+      catch { case _: Exception => wall } // prior commit expired: keep wall
     }
     val pcJson = partCols.map(c => s""""${esc(c)}"""").mkString("[", ",", "]")
     // a metaData action rides version 0, any commit whose schema shape
     // evolved, and any configuration change (constraints) — latest-wins
     // fold on the read side, per the protocol
     val emitMeta = version == 0L || extraConfig.isDefined || schemaJson.exists { j =>
-      readMeta(root).exists { case (cur, _) =>
-        !sameShape(cur, DataType.fromJson(j).asInstanceOf[StructType]) }
+      prior.meta.exists(m =>
+        !sameShape(m.schema, DataType.fromJson(j).asInstanceOf[StructType]))
     }
-    // configuration survives re-emission: a schema evolution must not drop
-    // the table's constraints
-    val config = extraConfig.getOrElse(
-      if (version == 0L) Map.empty[String, String] else readTableConfig(root))
     val configJson = config.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
       .mkString("{", ",", "}")
@@ -399,10 +187,10 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
     // PROTOCOL.md); the commit that first sets one upgrades the protocol.
     // Deletion vectors are a TABLE FEATURE: reader 3 / writer 7 with
     // explicit readerFeatures/writerFeatures. Feature state is derived
-    // from the FOLDED config (already in hand — O(1)): once
-    // delta.enableDeletionVectors landed, every later protocol emission
-    // keeps the feature lists, so a later constraint commit can never
-    // fold-downgrade the protocol below what the DV files require.
+    // from the FOLDED config: once delta.enableDeletionVectors landed,
+    // every later protocol emission keeps the feature lists, so a later
+    // constraint commit can never fold-downgrade the protocol below what
+    // the DV files require.
     val needsWriter3 = extraConfig.exists(_.keys.exists(_.startsWith("delta.constraints.")))
     val dvActive = adds.exists(_.dv.isDefined) ||
       config.get("delta.enableDeletionVectors").contains("true")
@@ -455,13 +243,18 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
       else Seq.empty) ++
       txn.map { case (app, v) => s"""{"txn":{"appId":"${esc(app)}","version":$v}}""" }.toSeq ++
       Seq(s"""{"commitInfo":{"timestamp":$now,"operation":"${esc(op)}"}}""")
+    // removes BEFORE adds: a merge-on-read commit removes and re-adds the
+    // SAME path (new deletion vector), and the line-ordered fold must land
+    // on the re-add. A remove of a DV-carrying instance names the
+    // descriptor it tombstones — strict protocol readers reconcile
+    // adds/removes by (path, dvId), not path alone.
     val lines = head ++
       removes.map { f =>
         val dvF = removeDvs.get(f)
           .map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
         s"""{"remove":{"path":"${esc(f)}","deletionTimestamp":$now,"dataChange":$dataChange$dvF}}"""
       } ++
-      adds.map { a =>
+      stamped.map { a =>
         val mt = Files.getLastModifiedTime(filePath(root, a.file)).toMillis
         val stField = a.stats.map(j => s""","stats":"${esc(j)}"""").getOrElse("")
         val dvField = a.dv.map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
@@ -469,247 +262,289 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
         // version whose commit assigned it
         val rField = a.baseRowId.map(r =>
           s""","baseRowId":$r,"defaultRowCommitVersion":$version""").getOrElse("")
+        // per-file Bloom indexes ride the protocol's free-form add tags
+        val tField = a.bloom.map(b => s""","tags":{"${TxnModel.BloomTag}":"${esc(b)}"}""").getOrElse("")
         val pv = a.partitionValues.toSeq.sortBy(_._1)
           .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
           .mkString("{", ",", "}")
-        s"""{"add":{"path":"${esc(a.file)}","partitionValues":$pv,"size":${a.bytes},"modificationTime":$mt,"dataChange":$dataChange$stField$dvField$rField}}"""
+        s"""{"add":{"path":"${esc(a.file)}","partitionValues":$pv,"size":${a.bytes},"modificationTime":$mt,"dataChange":$dataChange$stField$dvField$rField$tField}}"""
       } ++
       // the row-id high-water mark is DOMAIN METADATA per the protocol —
       // the one piece of row-tracking state adds alone cannot carry
       // (vacuumed history must never recycle ids)
       hwm.map(h =>
-        s"""{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\\"rowIdHighWaterMark\\":${h - 1}}","removed":false}}""").toSeq ++
+        s"""{"domainMetadata":{"domain":"${TxnModel.RowTrackingDomain}","configuration":"{\\"rowIdHighWaterMark\\":${h - 1}}","removed":false}}""").toSeq ++
       // change-data files (the protocol's AddCDCFile): CDF readers fold
       // these from the version-range commit JSONs — per the protocol they
-      // do NOT enter checkpoints, so writeDeltaCheckpoint skips them
+      // do NOT enter checkpoints
       cdc.map { a =>
         s"""{"cdc":{"path":"${esc(a.file)}","partitionValues":{},"size":${a.bytes},"dataChange":false}}"""
       }
-    val tmp = deltaDir(root).resolve(s".$version.json.tmp")
+    Files.createDirectories(deltaDir(root))
+    val tmp = deltaDir(root).resolve(
+      s".$version-${java.util.UUID.randomUUID().toString.take(8)}.json.tmp")
     Files.write(tmp, lines.mkString("\n").getBytes(UTF_8))
-    Files.move(tmp, deltaDir(root).resolve(f"$version%020d.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    if (!CommitLock.active.claim(commitPath(root, version), tmp))
+      throw new ConcurrentCommitException(root, version)
     if (version > 0 && version % CheckpointInterval == 0)
-      writeDeltaCheckpoint(root, version)
+      writeCheckpoint(root, version)
   }
 
-  /** Commits between Delta checkpoint parquet files. */
+
+  /** Commits between checkpoint parquet files. */
   private[sources] val CheckpointInterval = 10L
 
+  /** file → add over a candidate set, for resolving the `_file` values a
+    * scan attributed rows to. A miss is a broken invariant (a path that did
+    * not round-trip to its log key), so it fails naming the file and the
+    * table instead of a bare NoSuchElementException. */
+  private[sources] def addIndex(root: String, adds: Seq[AddFile]): String => AddFile = {
+    val m = adds.map(a => a.file -> a).toMap
+    f => m.getOrElse(f, sys.error(
+      s"file $f is not among the candidate adds of $root's snapshot"))
+  }
+
+  /** Re-run `body` (which recomputes latest+1 and its snapshot basis each
+    * attempt) until its commit wins the version CAS. Orphaned data files a
+    * losing attempt wrote are unreferenced by any log entry, invisible to
+    * readers, and reclaimed by [[vacuum]] — the same garbage story as the
+    * open formats. */
+  private[sources] def casRetry[T](what: String)(body: => T): T = {
+    var attempts = 0
+    while (true) {
+      try return body
+      catch { case _: ConcurrentCommitException =>
+        attempts += 1
+        require(attempts < 64, s"$what lost the commit race $attempts times")
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** Deterministic table id for the Delta metaData action (stable across
+    * commits; derived from the table root, not wall-clock). */
+  private[sources] def tableId(root: String): String =
+    java.util.UUID.nameUUIDFromBytes(("graft-txn:" + root).getBytes(UTF_8)).toString
+
+  // ---- the fold ----------------------------------------------------------------
+
+  private[sources] def num(m: Map[String, Any], k: String): Option[Long] =
+    m.get(k).collect { case b: BigDecimal => b.toLongExact }
+  private def strs(m: Map[String, Any], k: String): Option[Seq[String]] =
+    m.get(k).collect { case s: Seq[_] => s.collect { case x: String => x } }
+  private def strMap(m: Map[String, Any], k: String): Map[String, String] =
+    m.get(k).collect { case x: Map[_, _] =>
+      x.collect { case (k: String, v: String) => k -> v } }.getOrElse(Map.empty)
+  private[sources] def obj(m: Map[String, Any], k: String): Option[Map[String, Any]] =
+    m.get(k).collect { case x: Map[_, _] => x.asInstanceOf[Map[String, Any]] }
+
+  private[sources] def addOf(a: Map[String, Any]): LoggedAdd =
+    LoggedAdd(AddFile(a("path").asInstanceOf[String], num(a, "size").getOrElse(0L),
+      a.get("stats").collect { case s: String => s }, strMap(a, "partitionValues"),
+      strMap(a, "tags").get(TxnModel.BloomTag), obj(a, "deletionVector").map(dvOf),
+      num(a, "baseRowId")),
+      num(a, "modificationTime").getOrElse(0L), num(a, "defaultRowCommitVersion"))
+
+  /** Fold the log up to `asOf` (−1 = latest): seeded from the newest
+    * checkpoint parquet at or below it, then the commit JSONs after that
+    * checkpoint, each action in line order (the protocol's rule: a remove
+    * cancels the add before it, a LATER re-add — restore, a DV rewrite —
+    * resurrects the file). Reads parquet on the driver, never through a
+    * Spark job. A version below the retained log ([[expireLog]]) fails
+    * loudly instead of folding a partial history. */
+  private[sources] def snapshot(root: String, asOf: Long = -1L): Snapshot = {
+    val (jsons, cps) = logListing(root)
+    val upTo = if (asOf < 0) jsons.lastOption.getOrElse(-1L) else asOf
+    val seed = cps.filter(_ <= upTo).lastOption
+    require(upTo < 0 || seed.isDefined || jsons.headOption.forall(_ == 0L),
+      s"version $upTo of $root is below the retained log (first retained " +
+        s"commit ${jsons.head}); expireLog removed its history")
+    val adds = scala.collection.mutable.LinkedHashMap.empty[String, LoggedAdd]
+    val tombs = scala.collection.mutable.LinkedHashMap.empty[String, Tombstone]
+    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val domains = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var protocol: Option[Protocol] = None
+    var meta: Option[TableMeta] = None
+    def fold(action: Map[String, Any]): Unit = {
+      val (kind, body) = action.head
+      val m = body.asInstanceOf[Map[String, Any]]
+      kind match {
+        case "add" =>
+          val la = addOf(m)
+          adds(la.add.file) = la; tombs.remove(la.add.file)
+        case "remove" =>
+          val path = m("path").asInstanceOf[String]
+          adds.remove(path)
+          tombs(path) = Tombstone(path, num(m, "deletionTimestamp").getOrElse(0L),
+            obj(m, "deletionVector").map(dvOf))
+        case "metaData" =>
+          meta = Some(TableMeta(m.get("id").collect { case s: String => s }.getOrElse(""),
+            m("schemaString").asInstanceOf[String],
+            strs(m, "partitionColumns").getOrElse(Nil), strMap(m, "configuration"),
+            num(m, "createdTime")))
+        case "protocol" =>
+          protocol = Some(Protocol(num(m, "minReaderVersion").get.toInt,
+            num(m, "minWriterVersion").get.toInt,
+            strs(m, "readerFeatures"), strs(m, "writerFeatures")))
+        case "txn" =>
+          txns(m("appId").asInstanceOf[String]) = num(m, "version").get
+        case "domainMetadata" =>
+          val name = m("domain").asInstanceOf[String]
+          if (m.get("removed").contains(true)) domains.remove(name)
+          else domains(name) = m("configuration").asInstanceOf[String]
+        case _ => () // commitInfo, cdc: history, not state
+      }
+    }
+    seed.foreach(cv => checkpointActions(checkpointPath(root, cv)).foreach(fold))
+    val tail = jsons.filter(v => v > seed.getOrElse(-1L) && v <= upTo)
+    tail.foreach(v => commitLines(root, v).foreach(fold))
+    Snapshot(adds.values.toSeq, tombs.values.toSeq, protocol, meta,
+      txns.toMap, domains.toMap)
+  }
+
+  /** One commit's actions, parsed in line order. */
+  private[sources] def commitLines(root: String, v: Long): Seq[Map[String, Any]] =
+    parsedOnce(commitPath(root, v))(p =>
+      Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
+        .map(MiniJson.parse(_).asInstanceOf[Map[String, Any]]))
+
+  private def checkpointActions(p: Path): Seq[Map[String, Any]] =
+    parsedOnce(p)(readCheckpoint)
+
+  /** Parsed log files by path, valid while the file's identity (inode,
+    * size, mtime) holds. A published commit or checkpoint never changes,
+    * and one operation folds the same checkpoint + tail several times
+    * (schema, config, live files, the commit's own basis); a replaced
+    * file (DROP, then a re-create at the same root) misses on its
+    * identity. */
+  private val parsedLog =
+    new java.util.concurrent.ConcurrentHashMap[Path, (AnyRef, Seq[Map[String, Any]])]()
+
+  private def parsedOnce(p: Path)(parse: Path => Seq[Map[String, Any]]): Seq[Map[String, Any]] = {
+    val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+    val id = (a.fileKey, a.size, a.lastModifiedTime)
+    Option(parsedLog.get(p)).filter(_._1 == id).map(_._2).getOrElse {
+      val acts = parse(p)
+      if (parsedLog.size >= 4096) parsedLog.clear()
+      parsedLog.put(p, (id, acts))
+      acts
+    }
+  }
+
+  /** The rows of a checkpoint parquet, each decoded into the same
+    * single-key action map a commit JSON line parses to — so checkpoints
+    * and commits feed the one fold. Record-API read on the driver (the
+    * [[footerStats]]/[[GroupDecode]] machinery), no Spark job. */
+  private def readCheckpoint(p: Path): Seq[Map[String, Any]] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{ListLogicalTypeAnnotation, MapLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    def value(g: Group, i: Int): Any = {
+      val t = g.getType.getType(i)
+      if (t.isPrimitive) t.asPrimitiveType.getPrimitiveTypeName match {
+        case BINARY  => g.getString(i, 0)
+        case INT32   => BigDecimal(g.getInteger(i, 0))
+        case INT64   => BigDecimal(g.getLong(i, 0))
+        case BOOLEAN => g.getBoolean(i, 0)
+        case other   => sys.error(s"checkpoint $p: unexpected parquet type $other")
+      } else {
+        val sub = g.getGroup(i, 0)
+        // MAP / LIST: a repeated wrapper group of key_value / element
+        def entries = (0 until sub.getFieldRepetitionCount(0)).map(sub.getGroup(0, _))
+        def opt(e: Group, j: Int): Any = if (e.getFieldRepetitionCount(j) == 0) null else value(e, j)
+        t.getLogicalTypeAnnotation match {
+          case _: MapLogicalTypeAnnotation => entries.map(e => e.getString(0, 0) -> opt(e, 1)).toMap
+          case _: ListLogicalTypeAnnotation => entries.map(opt(_, 0))
+          case _ => fields(sub)
+        }
+      }
+    }
+    def fields(g: Group): Map[String, Any] =
+      (0 until g.getType.getFieldCount).filter(g.getFieldRepetitionCount(_) > 0)
+        .map(i => g.getType.getFieldName(i) -> value(g, i)).toMap
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(p.toUri), GroupDecode.freshConf()))
+    try {
+      val schema = rd.getFooter.getFileMetaData.getSchema
+      val out = Seq.newBuilder[Map[String, Any]]
+      var rg = rd.readNextRowGroup()
+      while (rg != null) {
+        val rr = new ColumnIOFactory().getColumnIO(schema)
+          .getRecordReader(rg, new GroupRecordConverter(schema))
+        var n = 0L
+        while (n < rg.getRowCount) {
+          val row = fields(rr.read())
+          if (row.nonEmpty) out += row
+          n += 1
+        }
+        rg = rd.readNextRowGroup()
+      }
+      out.result()
+    } finally rd.close()
+  }
+
+  /** (checkpoint version used, tail commit files folded) for a read at
+    * `asOf` — the observability hook the checkpoint spec gates on. */
+  private[graft] def foldReport(root: String, asOf: Long = -1L): (Option[Long], Int) = {
+    val (jsons, cps) = logListing(root)
+    val upTo = if (asOf < 0) jsons.lastOption.getOrElse(-1L) else asOf
+    val ck = cps.filter(_ <= upTo).lastOption
+    (ck, jsons.count(v => v > ck.getOrElse(-1L) && v <= upTo))
+  }
+
   /** Write a PROTOCOL.md checkpoint: one parquet file holding the complete
-    * replay state at `version` (latest protocol + metaData, per-appId txn
-    * high-water marks, every live add, current remove tombstones), plus the
-    * `_last_checkpoint` pointer. External readers then fold O(1) checkpoint
-    * rows + the JSON tail after it instead of every commit since version 0
-    * — without this, a 100k-commit table's LOG becomes the read bottleneck.
-    * The state is reconstructed by folding the mirror's own JSON (never the
-    * private `_txn_log`), so the checkpoint can only contain what an
-    * external reader would have computed itself. Checkpoint actions carry
+    * replay state at `version` — latest protocol + metaData, per-appId txn
+    * versions, every live add, current remove tombstones, domain metadata
+    * — plus the `_last_checkpoint` pointer. Every reader (this module's
+    * [[snapshot]] and external engines alike) then folds O(1) checkpoint
+    * rows + the JSON tail after it instead of every commit since version 0;
+    * [[expireLog]] can then drop the JSONs below it. The state comes from
+    * [[snapshot]] itself, which seeds from the previous checkpoint, so the
+    * chain stays lossless across expiries. Checkpoint actions carry
     * `dataChange:false` per the protocol. The pointer is written LAST and
     * atomically: a crash mid-checkpoint leaves the previous pointer intact
-    * and readers just fold a longer tail.
-    *
-    * The fold SEEDS from the newest prior checkpoint parquet (exactly like
-    * an external reader would) and replays only the JSON tail after it.
-    * Without the seed, the first checkpoint-boundary commit after
-    * [[expireLog]] — which deletes the JSONs below the previous checkpoint
-    * — would find no protocol/metaData line at all, or worse, silently
-    * drop every live add recorded only in the expired JSONs. */
-  private[sources] def writeDeltaCheckpoint(root: String, version: Long): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(return)
+    * and readers just fold a longer tail. */
+  private[sources] def writeCheckpoint(root: String, version: Long): Unit = {
+    val spark = SparkSession.getActiveSession.getOrElse(return)
+    val s = snapshot(root, version)
     val d = deltaDir(root)
-    var protocol: Map[String, Any] = null
-    var metaData: Map[String, Any] = null
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val adds = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Any]]
-    val tombs = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Any]]
-    // latest-wins per domain (the protocol's domainMetadata fold rule)
-    val domains = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Any]]
-    // -- seed from the newest prior checkpoint, if any ---------------------
-    val priorCp = listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".checkpoint.parquet"))
-      .map(_.stripSuffix(".checkpoint.parquet").toLong).filter(_ < version)
-      .maxOption
-    priorCp.foreach { cv =>
-      def bd(l: Any): Any = l match {
-        case l: java.lang.Long    => BigDecimal(l.longValue)
-        case i: java.lang.Integer => BigDecimal(i.intValue)
-        case _                    => null
-      }
-      def noNull(m: Map[String, Any]): Map[String, Any] =
-        m.filter(_._2 != null)
-      spark.read.parquet(d.resolve(f"$cv%020d.checkpoint.parquet").toString)
-        .collect().foreach { r =>
-          def optField(row: org.apache.spark.sql.Row, name: String): Option[Any] =
-            if (row.schema != null && row.schema.fieldNames.contains(name) &&
-              !row.isNullAt(row.fieldIndex(name)))
-              Some(row.get(row.fieldIndex(name)))
-            else None
-          if (!r.isNullAt(r.fieldIndex("protocol"))) {
-            val p = r.getStruct(r.fieldIndex("protocol"))
-            protocol = Map(
-              "minReaderVersion" -> bd(p.get(0)),
-              "minWriterVersion" -> bd(p.get(1))) ++
-              optField(p, "readerFeatures").map(f =>
-                "readerFeatures" -> (f.asInstanceOf[scala.collection.Seq[String]]
-                  .toSeq.map(x => x: Any): Any)) ++
-              optField(p, "writerFeatures").map(f =>
-                "writerFeatures" -> (f.asInstanceOf[scala.collection.Seq[String]]
-                  .toSeq.map(x => x: Any): Any))
-          }
-          if (!r.isNullAt(r.fieldIndex("metaData"))) {
-            val m = r.getStruct(r.fieldIndex("metaData"))
-            metaData = noNull(Map(
-              "id" -> m.get(0), "name" -> m.get(1), "description" -> m.get(2),
-              "schemaString" -> m.get(4),
-              "partitionColumns" ->
-                (if (m.isNullAt(5)) null else m.getSeq[String](5).toSeq),
-              "configuration" ->
-                (if (m.isNullAt(6)) null else m.getMap[String, String](6).toMap),
-              "createdTime" -> bd(m.get(7))))
-          }
-          if (!r.isNullAt(r.fieldIndex("txn"))) {
-            val t = r.getStruct(r.fieldIndex("txn"))
-            txns(t.getString(0)) = t.getLong(1)
-          }
-          if (!r.isNullAt(r.fieldIndex("add"))) {
-            val a = r.getStruct(r.fieldIndex("add"))
-            val dvSeed = optField(a, "deletionVector").map { d0 =>
-              val d = d0.asInstanceOf[org.apache.spark.sql.Row]
-              "deletionVector" -> (Map(
-                "storageType" -> d.getString(0),
-                "pathOrInlineDv" -> d.getString(1),
-                "sizeInBytes" -> bd(d.get(3)),
-                "cardinality" -> bd(d.get(4))) ++
-                (if (d.isNullAt(2)) Map.empty[String, Any]
-                 else Map("offset" -> bd(d.get(2)))): Any)
-            }
-            adds(a.getString(0)) = noNull(Map(
-              "path" -> a.getString(0),
-              "partitionValues" ->
-                (if (a.isNullAt(1)) Map.empty[String, Any]
-                 else a.getMap[String, String](1).toMap),
-              "size" -> bd(a.get(2)), "modificationTime" -> bd(a.get(3)),
-              "stats" -> a.get(5)) ++ dvSeed ++
-              optField(a, "baseRowId").map("baseRowId" -> bd(_)) ++
-              optField(a, "defaultRowCommitVersion")
-                .map("defaultRowCommitVersion" -> bd(_)))
-          }
-          if (r.schema.fieldNames.contains("domainMetadata") &&
-            !r.isNullAt(r.fieldIndex("domainMetadata"))) {
-            val dm = r.getStruct(r.fieldIndex("domainMetadata"))
-            domains(dm.getString(0)) = Map(
-              "domain" -> dm.getString(0),
-              "configuration" -> dm.getString(1),
-              "removed" -> dm.getBoolean(2))
-          }
-          if (!r.isNullAt(r.fieldIndex("remove"))) {
-            val t = r.getStruct(r.fieldIndex("remove"))
-            val path = t.getString(0)
-            adds.remove(path)
-            // the tombstone's deletionVector (the instance it superseded)
-            // must survive the seed: strict readers reconcile by (path,
-            // dvId) and a dropped descriptor would break that after
-            // expireLog removes the JSON that carried it
-            val dvSeed = optField(t, "deletionVector").map { d0 =>
-              val d = d0.asInstanceOf[org.apache.spark.sql.Row]
-              "deletionVector" -> (Map(
-                "storageType" -> d.getString(0),
-                "pathOrInlineDv" -> d.getString(1),
-                "sizeInBytes" -> bd(d.get(3)),
-                "cardinality" -> bd(d.get(4))) ++
-                (if (d.isNullAt(2)) Map.empty[String, Any]
-                 else Map("offset" -> bd(d.get(2)))): Any)
-            }
-            tombs(path) = noNull(Map(
-              "path" -> path, "deletionTimestamp" -> bd(t.get(1))) ++ dvSeed)
-          }
-        }
-    }
-    // -- fold only the JSON tail after the seed ----------------------------
-    val vs = listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .filter(v => v <= version && v > priorCp.getOrElse(-1L)).toSeq.sorted
-    vs.foreach { v =>
-      Files.readAllLines(d.resolve(f"$v%020d.json")).asScala.foreach { line =>
-        val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]
-        m.get("protocol").foreach(p => protocol = p.asInstanceOf[Map[String, Any]])
-        m.get("metaData").foreach(p => metaData = p.asInstanceOf[Map[String, Any]])
-        m.get("txn").foreach { p => val t = p.asInstanceOf[Map[String, Any]]
-          txns(t("appId").asInstanceOf[String]) =
-            t("version").asInstanceOf[BigDecimal].toLongExact }
-        m.get("add").foreach { p => val a = p.asInstanceOf[Map[String, Any]]
-          val path = a("path").asInstanceOf[String]
-          adds(path) = a; tombs.remove(path) }
-        m.get("remove").foreach { p => val r = p.asInstanceOf[Map[String, Any]]
-          val path = r("path").asInstanceOf[String]
-          adds.remove(path); tombs(path) = r }
-        m.get("domainMetadata").foreach { p =>
-          val dm = p.asInstanceOf[Map[String, Any]]
-          domains(dm("domain").asInstanceOf[String]) = dm }
-      }
-    }
-    import org.apache.spark.sql.Row
-    def lng(m: Map[String, Any], k: String): java.lang.Long =
-      m.get(k).map(v => java.lang.Long.valueOf(
-        v.asInstanceOf[BigDecimal].toLongExact)).orNull
-    def str(m: Map[String, Any], k: String): String =
-      m.get(k).map(_.asInstanceOf[String]).orNull
-    def strSeq(m: Map[String, Any], k: String): Seq[String] =
-      m.get(k).map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])).orNull
-    def dvRow(m: Map[String, Any]): Row =
-      m.get("deletionVector").map { d0 =>
-        val d = d0.asInstanceOf[Map[String, Any]]
-        Row(str(d, "storageType"), str(d, "pathOrInlineDv"),
-          d.get("offset").map(x =>
-            Integer.valueOf(x.asInstanceOf[BigDecimal].toIntExact)).orNull,
-          Integer.valueOf(d("sizeInBytes").asInstanceOf[BigDecimal].toIntExact),
-          java.lang.Long.valueOf(d("cardinality").asInstanceOf[BigDecimal].toLongExact))
-      }.orNull
+    def jl(v: Option[Long]): java.lang.Long = v.map(java.lang.Long.valueOf).orNull
+    def dvRow(dv: Option[DeletionVectors.DvDescriptor]): Row = dv.map(x =>
+      Row(x.storageType, x.pathOrInlineDv, Integer.valueOf(x.offset),
+        Integer.valueOf(x.sizeInBytes), java.lang.Long.valueOf(x.cardinality))).orNull
     val rows: Seq[Row] =
-      Seq(Row(null, null, null, null,
-        Row(Integer.valueOf(protocol("minReaderVersion").asInstanceOf[BigDecimal].toIntExact),
-            Integer.valueOf(protocol("minWriterVersion").asInstanceOf[BigDecimal].toIntExact),
-            strSeq(protocol, "readerFeatures"),
-            strSeq(protocol, "writerFeatures")), null)) ++
-      Seq(Row(null, null, null,
-        Row(str(metaData, "id"), str(metaData, "name"), str(metaData, "description"),
-          Row("parquet", Map.empty[String, String]),
-          str(metaData, "schemaString"),
-          metaData.getOrElse("partitionColumns", Seq.empty).asInstanceOf[Seq[Any]]
-            .map(_.asInstanceOf[String]),
-          // the real configuration (delta.constraints.* etc.) must survive
-          // into the checkpoint — after expireLog removes the
-          // metaData-bearing JSONs it is the only copy an external reader
-          // ever sees
-          metaData.getOrElse("configuration", Map.empty)
-            .asInstanceOf[Map[String, Any]]
-            .map { case (k, v) => k -> v.asInstanceOf[String] },
-          lng(metaData, "createdTime")),
+      s.protocol.toSeq.map(p => Row(null, null, null, null,
+        Row(p.minReader, p.minWriter, p.readerFeatures.orNull, p.writerFeatures.orNull),
+        null)) ++
+      s.meta.toSeq.map(m => Row(null, null, null,
+        // the real configuration (delta.constraints.* etc.) must survive
+        // into the checkpoint — after expireLog removes the metaData-
+        // bearing JSONs it is the only copy any reader ever sees
+        Row(m.id, null, null, Row("parquet", Map.empty[String, String]),
+          m.schemaString, m.partitionColumns, m.configuration, jl(m.createdTime)),
         null, null)) ++
-      txns.toSeq.map { case (app, v) =>
+      s.txns.toSeq.map { case (app, v) =>
         Row(Row(app, java.lang.Long.valueOf(v), null), null, null, null, null, null) } ++
-      adds.values.toSeq.map { a =>
-        Row(null,
-          Row(str(a, "path"),
-            a.getOrElse("partitionValues", Map.empty).asInstanceOf[Map[String, Any]]
-              .map { case (k, v) => k -> v.asInstanceOf[String] },
-            lng(a, "size"), lng(a, "modificationTime"),
-            java.lang.Boolean.FALSE, str(a, "stats"), dvRow(a),
-            lng(a, "baseRowId"), lng(a, "defaultRowCommitVersion")),
+      s.adds.map { la =>
+        val a = la.add
+        Row(null, Row(a.file, a.partitionValues, a.bytes, la.modificationTime,
+          false, a.stats.orNull, dvRow(a.dv), jl(a.baseRowId), jl(la.rowCommitVersion),
+          a.bloom.map(b => Map(TxnModel.BloomTag -> b)).orNull),
           null, null, null, null) } ++
-      tombs.values.toSeq.map { r =>
-        Row(null, null,
-          Row(str(r, "path"), lng(r, "deletionTimestamp"), java.lang.Boolean.FALSE,
-            dvRow(r)),
-          null, null, null) } ++
-      domains.values.toSeq.map { dm =>
-        Row(null, null, null, null, null,
-          Row(dm("domain").asInstanceOf[String],
-            dm("configuration").asInstanceOf[String],
-            java.lang.Boolean.valueOf(
-              dm.get("removed").exists(_ == true)))) }
+      s.tombstones.map(t => Row(null, null,
+        Row(t.path, t.deletionTimestamp, false, dvRow(t.dv)), null, null, null)) ++
+      s.domains.toSeq.map { case (name, cfg) =>
+        Row(null, null, null, null, null, Row(name, cfg, false)) }
+    val dvSchema = StructType(Seq(
+      StructField("storageType", StringType),
+      StructField("pathOrInlineDv", StringType),
+      StructField("offset", IntegerType),
+      StructField("sizeInBytes", IntegerType),
+      StructField("cardinality", LongType)))
     val cpSchema = StructType(Seq(
       StructField("txn", StructType(Seq(
         StructField("appId", StringType), StructField("version", LongType),
@@ -721,24 +556,15 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
         StructField("modificationTime", LongType),
         StructField("dataChange", BooleanType),
         StructField("stats", StringType),
-        StructField("deletionVector", StructType(Seq(
-          StructField("storageType", StringType),
-          StructField("pathOrInlineDv", StringType),
-          StructField("offset", IntegerType),
-          StructField("sizeInBytes", IntegerType),
-          StructField("cardinality", LongType)))),
+        StructField("deletionVector", dvSchema),
         StructField("baseRowId", LongType),
-        StructField("defaultRowCommitVersion", LongType)))),
+        StructField("defaultRowCommitVersion", LongType),
+        StructField("tags", MapType(StringType, StringType))))),
       StructField("remove", StructType(Seq(
         StructField("path", StringType),
         StructField("deletionTimestamp", LongType),
         StructField("dataChange", BooleanType),
-        StructField("deletionVector", StructType(Seq(
-          StructField("storageType", StringType),
-          StructField("pathOrInlineDv", StringType),
-          StructField("offset", IntegerType),
-          StructField("sizeInBytes", IntegerType),
-          StructField("cardinality", LongType))))))),
+        StructField("deletionVector", dvSchema)))),
       StructField("metaData", StructType(Seq(
         StructField("id", StringType),
         StructField("name", StringType),
@@ -759,14 +585,13 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
         StructField("domain", StringType),
         StructField("configuration", StringType),
         StructField("removed", BooleanType))))))
-    val tmpDir = d.resolve(s".cp-$version")
+    val tmpDir = d.resolve(s".cp-$version-${java.util.UUID.randomUUID().toString.take(8)}")
     spark.createDataFrame(rows.asJava, cpSchema).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
     val part = listClosed(tmpDir).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet"))
       .getOrElse(sys.error("checkpoint write produced no parquet part"))
-    Files.move(part, d.resolve(f"$version%020d.checkpoint.parquet"),
-      StandardCopyOption.ATOMIC_MOVE)
+    Files.move(part, checkpointPath(root, version), StandardCopyOption.ATOMIC_MOVE)
     walkClosed(tmpDir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     val ptrTmp = d.resolve(s"._last_checkpoint.tmp")
     Files.write(ptrTmp,

@@ -131,7 +131,7 @@ private[sources] object MergeMulti {
     require(rewriteFraction > 0 && rewriteFraction <= 1,
       s"rewriteFraction must be in (0,1], got $rewriteFraction")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema0, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to merge into"))
     // WITH SCHEMA EVOLUTION (the Delta rule): source columns absent from
@@ -184,7 +184,7 @@ private[sources] object MergeMulti {
     val live = liveAdds(root, v - 1)
     val sourceCols = source.columns.toSet
     val srcCols = source.columns.toSeq
-    val byFile = live.map(a => (a.file, a)).toMap
+    val byFile = addIndex(root, live)
     def emptyLike(extra: Seq[StructField] = Nil): DataFrame =
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),

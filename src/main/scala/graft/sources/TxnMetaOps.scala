@@ -11,42 +11,46 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** [[TxnTable]] concern module — METADATA: log fold (actions → live
-  * snapshot), schema/config reads, CHECK constraints, and the
+/** [[TxnTable]] concern module — METADATA: commit history reads,
+  * snapshot-derived schema/config reads, CHECK constraints, and the
   * metadata-only evolutions (rename/drop via name-mode column mapping,
   * type widening, generated columns). */
 private[sources] trait TxnMetaOps { self: TxnTable.type =>
-  private[sources] final case class Action(version: Long, op: String, action: String,
-                                  add: AddFile)
-
-  /** Parse one committed version's log file. Each line is a flat JSON
-    * object written by [[commit]]; parsed with [[MiniJson]] so escaped
-    * quotes/backslashes in caller-supplied op tokens round-trip exactly
-    * (a positional split would truncate at the first embedded quote and
-    * silently corrupt the idempotent-append dedup ledger). */
-  private[sources] def parseLog(root: String, v: Long): Seq[Action] =
-    Files.readAllLines(logDir(root).resolve(f"$v%020d.json")).asScala.toSeq.map { line =>
-      val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]
-      Action(m("version").asInstanceOf[BigDecimal].toLongExact,
-        m("op").asInstanceOf[String], m("action").asInstanceOf[String],
-        parseAddFields(m))
+  private[sources] def readCommit(root: String, v: Long): Commit = {
+    val lines = commitLines(root, v)
+    val info = lines.find(_.contains("commitInfo")).map(_("commitInfo")
+      .asInstanceOf[Map[String, Any]])
+      .getOrElse(sys.error(s"version $v of $root has no commitInfo"))
+    val op = info.get("operation").collect { case s: String => s }.getOrElse("?")
+    val acts = lines.flatMap { line =>
+      val (kind, body) = line.head
+      val m = body.asInstanceOf[Map[String, Any]]
+      kind match {
+        case "add" => Some(Action(v, op, "add", addOf(m).add))
+        case "remove" => Some(Action(v, op, "remove", AddFile(
+          m("path").asInstanceOf[String], 0L, None, dv = obj(m, "deletionVector").map(dvOf))))
+        case "cdc" => Some(Action(v, op, "cdc", AddFile(
+          m("path").asInstanceOf[String], num(m, "size").getOrElse(0L), None)))
+        case _ => None
+      }
     }
+    Commit(op, info("timestamp").asInstanceOf[BigDecimal].toLongExact, acts)
+  }
 
-  /** Log actions up to and including `asOf` (whole log when < 0). */
+  /** File actions up to and including `asOf` (whole log when < 0). */
   private[sources] def actions(root: String, asOf: Long): Seq[Action] =
-    versions(root).filter(v => asOf < 0 || v <= asOf).flatMap(parseLog(root, _))
+    versions(root).filter(v => asOf < 0 || v <= asOf).flatMap(readCommit(root, _).actions)
 
   /** One committed version's (op, added files, change-data files,
     * rewrites-data?) — the streaming tail's planning unit. A version with
     * removes under a data-changing op REWRITES rows; an append-only
     * consumer must balk, a change-feed consumer reads the cdc files. */
   private[sources] def commitActions(root: String, v: Long): (String, Seq[AddFile], Seq[AddFile], Boolean) = {
-    val acts = parseLog(root, v)
-    val op = acts.headOption.map(_.op).getOrElse("?")
-    (op,
-      acts.collect { case Action(_, _, "add", a) => a },
-      acts.collect { case Action(_, _, "cdc", a) => a },
-      acts.exists(_.action == "remove"))
+    val c = readCommit(root, v)
+    (c.op,
+      c.actions.collect { case Action(_, _, "add", a) => a },
+      c.actions.collect { case Action(_, _, "cdc", a) => a },
+      c.actions.exists(_.action == "remove"))
   }
 
   /** Table schema + partition columns for external consumers (the tail
@@ -61,91 +65,19 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   private[graft] def liveAddsForTest(root: String, asOf: Long = -1L): Seq[AddFile] =
     liveAdds(root, asOf)
 
-  private[sources] def liveAdds(root: String, asOf: Long): Seq[AddFile] = {
-    // SEQUENTIAL reconciliation in version order (the protocol rule): a
-    // remove cancels the add before it, and a LATER re-add resurrects the
-    // file — which is exactly what a metadata-only [[restore]] commits.
-    // (An all-time remove set would wrongly kill resurrected files.)
-    // Seeded from the newest checkpoint ≤ asOf, so the fold is
-    // O(checkpoint + tail), not O(versions) — see [[foldState]].
-    val upTo = if (asOf < 0) latestVersion(root) else asOf
-    foldState(root, upTo).live
-  }
+  private[sources] def liveAdds(root: String, asOf: Long): Seq[AddFile] =
+    snapshot(root, asOf).live
 
-  /** Table metadata from the `_delta_log` mirror's metaData actions — the
-    * mirror doubles as the metadata store, exactly as in the open
-    * protocol. LATEST-WINS fold over versions ≤ `asOf` (schema evolution
-    * re-emits metaData at the evolving commit; older versions keep their
-    * own schema under time travel). None for pre-mirror tables. */
-  private[sources] def readMeta(root: String, asOf: Long = -1L): Option[(StructType, Seq[String])] = {
-    val d = deltaDir(root)
-    if (!Files.isDirectory(d)) return None
-    // short-circuit via the _txn_log checkpoint's meta line: only the
-    // commits AFTER the newest checkpoint ≤ asOf can carry newer metaData,
-    // so a no-evolution 100k-commit table reads the tail + one line, not
-    // every commit since version 0
-    val ck = ckptVersions(root).filter(v => asOf < 0 || v <= asOf).lastOption
-    val vs = listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .filter(v => (asOf < 0 || v <= asOf) && v > ck.getOrElse(-1L)).toSeq.sorted
-    val fromTail = vs.reverseIterator.flatMap { v =>
-      Files.readAllLines(d.resolve(f"$v%020d.json")).asScala
-        .find(_.startsWith("""{"metaData":""")).map { line =>
-          val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]("metaData")
-            .asInstanceOf[Map[String, Any]]
-          val schema = DataType.fromJson(m("schemaString").asInstanceOf[String])
-            .asInstanceOf[StructType]
-          val pcs = m.getOrElse("partitionColumns", Seq.empty)
-            .asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])
-          (schema, pcs)
-        }
-    }.nextOption()
-    fromTail.orElse(ck.flatMap { v =>
-      Files.readAllLines(ckptPath(root, v)).asScala
-        .find(_.contains(""""action":"meta"""")).map { line =>
-          val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]
-          def dec(k: String) = new String(
-            java.util.Base64.getDecoder.decode(m(k).asInstanceOf[String]), UTF_8)
-          val schema = DataType.fromJson(dec("schema64")).asInstanceOf[StructType]
-          val pcs = MiniJson.parse(dec("parts64")).asInstanceOf[Seq[Any]]
-            .map(_.asInstanceOf[String])
-          (schema, pcs)
-        }
-    })
-  }
+  /** Schema + partition columns as of `asOf` (−1 = latest): the latest
+    * metaData action at or below it — schema evolution re-emits metaData
+    * at the evolving commit; older versions keep their own schema under
+    * time travel. None for an empty root. */
+  private[sources] def readMeta(root: String, asOf: Long = -1L): Option[(StructType, Seq[String])] =
+    snapshot(root, asOf).meta.map(m => (m.schema, m.partitionColumns))
 
-  /** Latest metaData configuration (latest-wins fold, like [[readMeta]]).
-    * Short-circuits through the `_txn_log` checkpoint's config64. */
-  private[sources] def readTableConfig(root: String): Map[String, String] = {
-    val d = deltaDir(root)
-    if (!Files.isDirectory(d)) return Map.empty
-    val ck = ckptVersions(root).lastOption
-    val vs = listClosed(d).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .filter(_ > ck.getOrElse(-1L)).toSeq.sorted
-    val fromTail = vs.reverseIterator.flatMap { v =>
-      Files.readAllLines(d.resolve(f"$v%020d.json")).asScala
-        .find(_.startsWith("""{"metaData":""")).map { line =>
-          MiniJson.parse(line).asInstanceOf[Map[String, Any]]("metaData")
-            .asInstanceOf[Map[String, Any]]
-            .getOrElse("configuration", Map.empty).asInstanceOf[Map[String, Any]]
-            .map { case (k, v) => k -> v.asInstanceOf[String] }
-        }
-    }.nextOption()
-    fromTail.orElse(ck.flatMap { v =>
-      Files.readAllLines(ckptPath(root, v)).asScala
-        .find(_.contains(""""action":"meta"""")).map { line =>
-          val m = MiniJson.parse(line).asInstanceOf[Map[String, Any]]
-          m.get("config64").map(s => MiniJson.parse(new String(
-            java.util.Base64.getDecoder.decode(s.asInstanceOf[String]), UTF_8))
-            .asInstanceOf[Map[String, Any]]
-            .map { case (k, v) => k -> v.asInstanceOf[String] })
-            .getOrElse(Map.empty[String, String])
-        }
-    }).getOrElse(Map.empty)
-  }
+  /** Latest metaData configuration (constraints, properties, features). */
+  private[sources] def readTableConfig(root: String): Map[String, String] =
+    snapshot(root).config
 
   private[sources] val ConstraintPrefix = "delta.constraints."
 
@@ -166,7 +98,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def setConstraint(spark: SparkSession, root: String,
                     name: String, exprSql: String): Long = casRetry("setConstraint") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val bad = read(spark, root)
       .filter(coalesce(expr(exprSql).cast("boolean"), lit(true)) === lit(false))
       .limit(1).count()
@@ -189,7 +121,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def setTableProperty(root: String, key: String, value: String): Long =
     casRetry("setProperty") {
       val v = latestVersion(root) + 1
-      require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+      require(v > 0, s"$root is not a TxnTable (no _delta_log)")
       val (schema, pcs) = readMeta(root).getOrElse(
         sys.error(s"$root has no metaData"))
       commit(root, v, s"set-property#$key", Seq.empty, Seq.empty,
@@ -256,7 +188,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def removeTableProperty(root: String, key: String): Long =
     casRetry("removeProperty") {
       val v = latestVersion(root) + 1
-      require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+      require(v > 0, s"$root is not a TxnTable (no _delta_log)")
       val (schema, pcs) = readMeta(root).getOrElse(
         sys.error(s"$root has no metaData"))
       commit(root, v, s"remove-property#$key", Seq.empty, Seq.empty,
@@ -268,7 +200,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   /** DROP a CHECK constraint (metadata-only commit). */
   def dropConstraint(root: String, name: String): Long = casRetry("dropConstraint") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     require(constraints(root).contains(name), s"no CHECK constraint $name")
     val (schema, pcs) = readMeta(root).getOrElse(sys.error("no metaData"))
     commit(root, v, s"drop-constraint#$name", Seq.empty, Seq.empty,
@@ -352,7 +284,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
     * upgrades the table to name-mode column mapping: every field is
     * stamped with its CURRENT name as `physicalName` plus a stable column
     * id (existing files already carry those physical names, so they keep
-    * reading), the config records the mode, and the mirror protocol
+    * reading), the config records the mode, and the log's protocol
     * upgrades to reader 2 / writer 5 (the mapping level, delta.io
     * PROTOCOL.md). Refused for partition columns (their name is
     * path-encoded in the hive layout), for columns referenced by CHECK
@@ -362,7 +294,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def renameColumn(spark: SparkSession, root: String,
                    oldName: String, newName: String): Long = casRetry("renameColumn") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to rename in"))
     require(schema.fieldNames.contains(oldName), s"no column $oldName")
@@ -433,7 +365,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def addColumn(spark: SparkSession, root: String,
                 colName: String, dt: DataType): Long = casRetry("addColumn") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to add to"))
     require(!schema.fieldNames.contains(colName),
@@ -449,7 +381,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def dropColumn(spark: SparkSession, root: String,
                  colName: String): Long = casRetry("dropColumn") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to drop from"))
     require(schema.fieldNames.contains(colName), s"no column $colName")
@@ -511,7 +443,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   }
 
   /** Per-field metadata key recording this column's type-change history
-    * (the mirror analogue of Delta's `delta.typeChanges`). */
+    * (Delta's `delta.typeChanges`). */
   private[sources] val TypeChangesKey = "delta.typeChanges"
 
   /** WIDEN a column's type — metadata-only (zero data bytes rewritten).
@@ -519,7 +451,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
     * at scan time ([[widens]]): byte→short→int→long, float→double, and
     * decimal precision/scale growth that keeps every old value exact.
     * The field records its change history under `delta.typeChanges`, the
-    * config records `delta.enableTypeWidening`, and the mirror protocol
+    * config records `delta.enableTypeWidening`, and the log's protocol
     * lists the typeWidening table feature. Appends after the widen must
     * carry the WIDE type; time travel below it keeps the narrow type
     * (each version reads under its own schema). Refused for partition
@@ -529,7 +461,7 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
   def widenColumn(spark: SparkSession, root: String,
                   colName: String, to: DataType): Long = casRetry("widenColumn") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to widen in"))
     val f = schema.fields.find(_.name == colName).getOrElse(
@@ -565,11 +497,11 @@ private[sources] trait TxnMetaOps { self: TxnTable.type =>
     * predicate on the SOURCE column prunes the generated column's
     * PARTITIONS — `ts >= X` drops day directories the user never named.
     * Records Delta's generationExpression field metadata + legacy writer
-    * version 4 in the mirror. */
+    * version 4 in the log. */
   def setGeneratedColumn(spark: SparkSession, root: String,
                          colName: String, exprSql: String): Long = casRetry("setGeneratedColumn") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val (schema, pcs) = readMeta(root).getOrElse(
       sys.error(s"$root has no metaData to declare a generated column in"))
     require(schema.fieldNames.contains(colName), s"no column $colName")

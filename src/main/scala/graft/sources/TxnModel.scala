@@ -22,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * (absent for pre-stats commits; readers must treat absence as
   * "cannot prune"). Numeric/boolean min-max are exact decimal numbers,
   * strings are JSON strings — the encodings the open Delta protocol uses,
-  * so the `_delta_log` mirror carries the identical payload. Temporal
+  * so the `_delta_log` add action carries it verbatim. Temporal
   * columns are left out of stats (their protocol encoding is a rendered
   * string; pruning on them can be added by widening `statsEligible`). */
 /** `baseRowId`: the file's first fresh ROW ID under row tracking
@@ -49,6 +49,62 @@ final case class FileStats(numRecords: Long,
                            minV: Map[String, Any], maxV: Map[String, Any],
                            nullC: Map[String, Long],
                            blooms: Map[String, (Int, Array[Long])] = Map.empty)
+
+private[sources] object TxnModel {
+  /** add-action tag carrying a file's Bloom index JSON. */
+  val BloomTag = "graft.bloom"
+  /** domainMetadata domain carrying the row-id high-water mark. */
+  val RowTrackingDomain = "delta.rowTracking"
+}
+
+/** A live add as the log records it: the file plus the two protocol
+  * fields only a checkpoint re-emits. */
+private[sources] final case class LoggedAdd(add: AddFile, modificationTime: Long,
+                                            rowCommitVersion: Option[Long])
+private[sources] final case class Tombstone(path: String, deletionTimestamp: Long,
+                                            dv: Option[DeletionVectors.DvDescriptor])
+private[sources] final case class Protocol(minReader: Int, minWriter: Int,
+                                           readerFeatures: Option[Seq[String]],
+                                           writerFeatures: Option[Seq[String]])
+private[sources] final case class TableMeta(id: String, schemaString: String,
+                                            partitionColumns: Seq[String],
+                                            configuration: Map[String, String],
+                                            createdTime: Option[Long]) {
+  lazy val schema: StructType = DataType.fromJson(schemaString).asInstanceOf[StructType]
+}
+
+/** The table at one version — everything the log says about it:
+  * live adds and remove tombstones in fold order, the latest protocol
+  * and metaData, the idempotence ledger (`txn` appId → version), the
+  * latest configuration of each metadata domain, and `hwm`, the next
+  * fresh row id (0 when row tracking never assigned any). */
+private[sources] final case class Snapshot(adds: Seq[LoggedAdd],
+                                           tombstones: Seq[Tombstone],
+                                           protocol: Option[Protocol],
+                                           meta: Option[TableMeta],
+                                           txns: Map[String, Long],
+                                           domains: Map[String, String]) {
+  def live: Seq[AddFile] = adds.map(_.add)
+  def config: Map[String, String] = meta.map(_.configuration).getOrElse(Map.empty)
+  // the domain stores the LAST assigned id; the fold wants the next one
+  def hwm: Long = domains.get(TxnModel.RowTrackingDomain).map(c =>
+    MiniJson.parse(c).asInstanceOf[Map[String, Any]]("rowIdHighWaterMark")
+      .asInstanceOf[BigDecimal].toLongExact + 1).getOrElse(0L)
+}
+private[sources] object Snapshot {
+  val empty: Snapshot = Snapshot(Nil, Nil, None, None, Map.empty, Map.empty)
+}
+
+/** One file action of a commit, with the commit's operation (its
+  * `commitInfo.operation`): `action` is add | remove | cdc. A remove's
+  * AddFile carries the path and the tombstoned deletion vector only. */
+private[sources] final case class Action(version: Long, op: String, action: String,
+                                add: AddFile)
+
+/** One committed version as history sees it: operation, commit
+  * timestamp, and its file actions in line order. */
+private[sources] final case class Commit(op: String, timestamp: Long,
+                                         actions: Seq[Action])
 
 // ---- minimal JSON codec for the stats payload ---------------------------
 // The stats object is machine-written by THIS module (strings, exact

@@ -23,7 +23,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * Fails loudly if a needed file was vacuumed away. */
   def readVersion(spark: SparkSession, root: String, asOf: Long): DataFrame = {
     val last = latestVersion(root)
-    require(last >= 0, s"$root is not a TxnTable (no _txn_log)")
+    require(last >= 0, s"$root is not a TxnTable (no _delta_log)")
     require(asOf <= last, s"version $asOf does not exist (latest $last)")
     val adds = liveAdds(root, asOf)
     val missing = adds.filterNot(a => Files.exists(filePath(root, a.file)))
@@ -53,8 +53,8 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * source's own too-old time travel (pin the source's retention
     * accordingly). */
   def cloneShallow(srcRoot: String, dstRoot: String): Long = {
-    require(latestVersion(srcRoot) >= 0, s"$srcRoot is not a TxnTable (no _txn_log)")
-    require(latestVersion(dstRoot) < 0, s"$dstRoot already has a _txn_log")
+    require(latestVersion(srcRoot) >= 0, s"$srcRoot is not a TxnTable (no _delta_log)")
+    require(latestVersion(dstRoot) < 0, s"$dstRoot already has a _delta_log")
     val (schema, pcs) = readMeta(srcRoot).getOrElse(
       sys.error(s"$srcRoot has no metaData to clone"))
     val srcAbs = Paths.get(srcRoot).toAbsolutePath
@@ -80,11 +80,11 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
 
   /** Resolve a wall-clock timestamp (epoch ms) to the LATEST version whose
     * commit landed at or before it — `timestampAsOf` time travel. The
-    * timestamp of record is the mirror's commitInfo (what external readers
+    * timestamp of record is the commit's commitInfo (what external readers
     * see). Fails loudly for instants before the first commit. */
   def versionAsOf(root: String, tsMillis: Long): Long = {
     val vs = versions(root)
-    require(vs.nonEmpty, s"$root is not a TxnTable (no _txn_log)")
+    require(vs.nonEmpty, s"$root is not a TxnTable (no _delta_log)")
     // commitInfo stamps come off one writer-side clock and are read
     // newest-first; the scan stops at the first (= latest) hit, so the
     // common "read the table as of just now" costs one file
@@ -95,50 +95,29 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
   }
 
   private[sources] def commitTimestamp(root: String, v: Long): Long =
-    Files.readAllLines(deltaDir(root).resolve(f"$v%020d.json")).asScala
-      .find(_.startsWith("""{"commitInfo":"""))
-      .map(l => MiniJson.parse(l).asInstanceOf[Map[String, Any]]("commitInfo")
-        .asInstanceOf[Map[String, Any]]("timestamp")
-        .asInstanceOf[BigDecimal].toLongExact)
-      .getOrElse(sys.error(s"version $v has no commitInfo"))
+    readCommit(root, v).timestamp
 
   /** Time travel by TIMESTAMP: the table as of the last commit ≤ `tsMillis`. */
   def readTimestamp(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
     readVersion(spark, root, versionAsOf(root, tsMillis))
 
   /** DESCRIBE HISTORY: one row per retained commit, newest first —
-    * version, commit timestamp (the mirror's commitInfo, what external
-    * readers see), operation, and action counts. Pure metadata fold,
+    * version, commit timestamp, operation, and action counts, straight off
+    * each commit's `commitInfo` and file actions. Pure metadata fold,
     * O(retained versions) like Delta's own; history below [[expireLog]]'s
     * horizon is gone with its commits, exactly like time travel. (The
     * per-ACTION audit dump is [[history]].) */
   def historySummary(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    require(latestVersion(root) >= 0, s"$root is not a TxnTable (no _txn_log)")
+    require(latestVersion(root) >= 0, s"$root is not a TxnTable (no _delta_log)")
     versions(root).map { v =>
-      val acts = parseLog(root, v)
-      val op = acts.headOption.map(_.op).getOrElse(
-        // metadata-only commits (rename, constraint) write no actions in
-        // the private log; the operation of record is the mirror's
-        (try mirrorOperation(root, v) catch { case _: Exception => None })
-          .getOrElse("?"))
-      // a version whose mirror entry is unavailable still lists — with a
-      // null timestamp, like history() — instead of failing the statement
-      val ts = try Some(new java.sql.Timestamp(commitTimestamp(root, v)))
-        catch { case _: Exception => None }
-      (v, ts, op,
-        acts.count(_.action == "add"), acts.count(_.action == "remove"),
-        acts.count(_.action == "cdc"))
+      val c = readCommit(root, v)
+      def n(kind: String) = c.actions.count(_.action == kind)
+      (v, new java.sql.Timestamp(c.timestamp), c.op, n("add"), n("remove"), n("cdc"))
     }.sortBy(-_._1)
       .toDF("version", "timestamp", "operation", "num_added_files",
         "num_removed_files", "num_change_files")
   }
-
-  private[sources] def mirrorOperation(root: String, v: Long): Option[String] =
-    Files.readAllLines(deltaDir(root).resolve(f"$v%020d.json")).asScala
-      .find(_.startsWith("""{"commitInfo":"""))
-      .flatMap(l => MiniJson.parse(l).asInstanceOf[Map[String, Any]]("commitInfo")
-        .asInstanceOf[Map[String, Any]].get("operation").map(_.asInstanceOf[String]))
 
   private[sources] def fileNameOf(f: String): String = {
     val i = f.lastIndexOf('/')
@@ -146,7 +125,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
   }
 
   /** file → descriptor for the DV-carrying members of a remove set, so
-    * the mirror's remove actions name the instance they tombstone. */
+    * the log's remove actions name the instance they tombstone. */
   private[sources] def dvTombstones(adds: Seq[AddFile]): Map[String, DeletionVectors.DvDescriptor] =
     adds.flatMap(a => a.dv.map(a.file -> _)).toMap
 
@@ -271,7 +250,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * enable has no row ids. */
   def enableRowTracking(spark: SparkSession, root: String): Long = casRetry("enableRowTracking") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     val cfg = readTableConfig(root)
     if (cfg.get("delta.enableRowTracking").contains("true")) return v - 1
     val (schema, pcs) = readMeta(root).getOrElse(
@@ -294,7 +273,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     require(rowTrackingOn(root),
       s"$root does not track row ids (call enableRowTracking first)")
     val last = latestVersion(root)
-    require(last >= 0, s"$root is not a TxnTable (no _txn_log)")
+    require(last >= 0, s"$root is not a TxnTable (no _delta_log)")
     require(asOf <= last, s"version $asOf does not exist (latest $last)")
     val adds = liveAdds(root, asOf)
     require(adds.nonEmpty, s"no live files at version $asOf")
@@ -465,7 +444,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * one delete-dv commit — the positions that commit deleted. Shared by
     * the batch CDF and the txn-tail streaming source. */
   private[sources] def dvDeltaBlobs(root: String, v: Long): Map[String, Array[Byte]] = {
-    val acts = parseLog(root, v)
+    val acts = readCommit(root, v).actions
     val newAdds = acts.collect { case Action(_, _, "add", a) => a }
     val oldDv = acts.collect { case Action(_, _, "remove", a) => a.file -> a.dv }.toMap
     newAdds.flatMap { a =>
@@ -536,8 +515,8 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
         renames.get(c).map(col(c).as(_)).getOrElse(col(c))): _*)
     }
     val perVersion = versions(root).filter(v => v > fromV && v <= toV).flatMap { v =>
-      val acts = parseLog(root, v)
-      val op = acts.headOption.map(_.op).getOrElse("?")
+      val c = readCommit(root, v)
+      val (acts, op) = (c.actions, c.op)
       val cdcFiles = acts.collect { case Action(_, _, "cdc", a) => a.file }
       val addFiles = acts.collect { case Action(_, _, "add", a) => a }
       val hasRemove = acts.exists(_.action == "remove")
@@ -586,7 +565,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * target version's files were already vacuumed. */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = casRetry("restore") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     require(toVersion >= 0 && toVersion < v,
       s"cannot restore to version $toVersion (latest ${v - 1})")
     val want = liveAdds(root, toVersion)
@@ -633,7 +612,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * the manifest files written, root-relative. */
   def generateManifest(root: String): Seq[String] = {
     val last = latestVersion(root)
-    require(last >= 0, s"$root is not a TxnTable (no _txn_log)")
+    require(last >= 0, s"$root is not a TxnTable (no _delta_log)")
     val live = liveAdds(root, last)
     val withDv = live.filter(_.dv.exists(_.cardinality > 0))
     require(withDv.isEmpty,
@@ -725,17 +704,12 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     s"CREATE TABLE $name (\n$cols)\nUSING graft$part$propsStr"
   }
 
-  /** Commit audit: one row per action, the DESCRIBE HISTORY analogue.
-    * `ts_millis` is the mirror's commitInfo timestamp (null when a
-    * version's mirror entry is unavailable). */
+  /** Commit audit: one row per file action, the DESCRIBE HISTORY
+    * analogue; `ts_millis` is the commit's `commitInfo` timestamp. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val ts: Map[Long, Option[Long]] = versions(root).map { v =>
-      v -> (try Some(commitTimestamp(root, v)) catch { case _: Exception => None })
-    }.toMap
-    actions(root, -1L)
-      .map(x => (x.version, ts.getOrElse(x.version, None),
-        x.op, x.action, x.add.file, x.add.bytes, x.add.stats.orNull))
+    versions(root).map(readCommit(root, _)).flatMap(c => c.actions.map(x =>
+      (x.version, c.timestamp, x.op, x.action, x.add.file, x.add.bytes, x.add.stats.orNull)))
       .toDF("version", "ts_millis", "op", "action", "file", "bytes", "stats")
   }
 }

@@ -315,7 +315,7 @@ private[sources] trait TxnSkipOps { self: TxnTable.type =>
   def readWhere(spark: SparkSession, root: String, pred: Column,
                 asOf: Long = -1L): DataFrame = {
     val last = latestVersion(root)
-    require(last >= 0, s"$root is not a TxnTable (no _txn_log)")
+    require(last >= 0, s"$root is not a TxnTable (no _delta_log)")
     require(asOf <= last, s"version $asOf does not exist (latest $last)")
     val adds = liveAdds(root, asOf)
     val meta = readMeta(root, asOf)
@@ -384,9 +384,9 @@ private[sources] trait TxnSkipOps { self: TxnTable.type =>
     * IntegerType or StringType key columns). The build is ONE distributed
     * pass over the just-written files — per row, k (word, bit) pairs;
     * per (file, word), a `bit_or` — so O(files × mBits/64) words reach
-    * the driver, never rows. The filters ride the custom log's add
-    * actions only (the `_delta_log` mirror stays protocol-clean; Delta
-    * keeps bloom indexes outside stats too). */
+    * the driver, never rows. The filters ride each add action's `tags`
+    * (`graft.bloom`), outside `stats` — the protocol's free-form slot,
+    * which readers that know nothing of it ignore. */
   def appendBloom(df: DataFrame, root: String,
                   bloomCols: Seq[String], mBits: Int = 8192,
                   partCols: Seq[String] = Nil): Long = {

@@ -14,14 +14,15 @@ import scala.jdk.CollectionConverters._
 /** Minimal log-structured table format over parquet — the executable
   * analogue of the Delta features the offline container blocks (the
   * delta-spark jar is unresolvable; see [[graft.streaming.CdcIngest]]'s
-  * format seam). The protocol SHAPE follows the public lakehouse-log
-  * design (Delta/Iceberg papers): an ordered `_txn_log/<version>.json`
-  * of add/remove FILE ACTIONS is the table's source of truth — readers
-  * list the log, fold actions into a snapshot, and read only live files.
+  * format seam). The table's one log IS the open Delta protocol: an
+  * ordered `_delta_log/<version>.json` of add/remove FILE ACTIONS plus
+  * parquet checkpoints is the source of truth for this module and for
+  * external engines alike — readers list the log, fold the actions into
+  * a snapshot, and read only live files.
   * That one idea buys, and this module implements:
   *
-  *  - **snapshot isolation**: a commit is one atomically-renamed log file;
-  *    readers never see half a commit;
+  *  - **snapshot isolation**: a commit is one atomically-claimed log
+  *    file; readers never see half a commit;
   *  - **time travel** ([[readVersion]]): fold actions only up to v;
   *  - **OPTIMIZE** ([[optimize]]): rewrite small files into compacted
   *    ones and commit remove+add — contents identical, history intact

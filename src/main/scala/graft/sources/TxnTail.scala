@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is closed by this source reading it back.
   *
   * Fidelity rules, mirroring the open lakehouse streaming sources:
-  *  - layout-only commits (`optimize*`, `dataChange:false` in the mirror)
+  *  - layout-only commits (`optimize*`, `dataChange:false` in the log)
   *    are SKIPPED — compaction must not re-deliver rows;
   *  - a data-changing commit that also REMOVES files (overwrite, merge,
   *    delete) rewrites rows and breaks append-only semantics: the source
@@ -72,7 +72,7 @@ object TxnTail {
       opt("readChangeFeed").exists(_.toBoolean))
   }
 
-  /** Table schema (from the mirror's metaData action) + `_commit_version`;
+  /** Table schema (from the log's metaData action) + `_commit_version`;
     * with `readChangeFeed=true` also `_change_type` — the STREAMING change
     * feed: appends arrive as inserts off their own add files, CDF-enabled
     * merge/delete commits arrive as their persisted change rows, and a

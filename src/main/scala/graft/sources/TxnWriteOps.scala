@@ -23,12 +23,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
   def create(spark: SparkSession, root: String, schema: StructType,
              partCols: Seq[String] = Nil,
              properties: Map[String, String] = Map.empty): Long = {
-    require(latestVersion(root) < 0, s"$root already has a _txn_log")
-    // a mirror without a log means an interrupted DROP (or foreign debris):
-    // creating here would splice two tables' mirror histories together
-    require(!java.nio.file.Files.isDirectory(deltaDir(root)),
-      s"$root has a stale _delta_log but no _txn_log — an interrupted DROP?" +
-        " Rename it aside (_delta_log.dropped-<ts>) before re-creating")
+    require(latestVersion(root) < 0, s"$root already has a _delta_log")
     require(partCols.forall(schema.fieldNames.contains),
       s"partition columns ${partCols.mkString(",")} must exist in the schema")
     val empty = spark.createDataFrame(
@@ -141,12 +136,11 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
   }
 
   /** Append into a HIVE-PARTITIONED layout (`data/vN/col=value/part…`):
-    * every add action records its partitionValues (custom log and Delta
-    * mirror alike), and reads prune on them BEFORE stats — the coarse
-    * 100 TB knife (a day-partitioned table's time-range query touches the
-    * matching directories' files only, by metadata fold alone). The first
-    * commit fixes the partition columns (recorded in the mirror's metaData
-    * action); later appends must match them. Partition column stats live
+    * every add action records its partitionValues, and reads prune on them
+    * BEFORE stats — the coarse 100 TB knife (a day-partitioned table's
+    * time-range query touches the matching directories' files only, by
+    * metadata fold alone). The first commit fixes the partition columns
+    * (recorded in the metaData action); later appends must match them. Partition column stats live
     * in partitionValues, data-column stats in the footers — exactly the
     * protocol's split. */
   def appendPartitioned(df: DataFrame, root: String,
@@ -247,11 +241,13 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     val pcs = readMeta(root).map(_._2).getOrElse(partCols)
     require(partCols.isEmpty || pcs == partCols,
       s"table is partitioned by ${pcs.mkString(",")}, got ${partCols.mkString(",")}")
-    val op = s"append#$token"
-    // the dedup ledger rides checkpoints too (token lines), so redelivery
-    // detection folds checkpoint + tail, never the whole history
-    def existing: Option[Long] =
-      foldState(root, latestVersion(root)).tokens.get(op)
+    // the merge ledger's appIds carry this prefix — an append token
+    // spelled the same would alias it
+    require(!token.startsWith(MergeDvLedger),
+      s"appendOnce token must not start with $MergeDvLedger: $token")
+    // the dedup ledger is the log's `txn` actions (appId = token), which
+    // checkpoints carry, so redelivery detection folds checkpoint + tail
+    def existing: Option[Long] = snapshot(root).txns.get(token)
     existing.getOrElse {
       val adds =
         if (pcs.isEmpty) writeDataFiles(df, root, latestVersion(root) + 1)
@@ -265,11 +261,11 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
         // live by the concurrent-appendOnce spec). If the racer claims v
         // first, our CAS fails and the retry sees their token.
         val v = latestVersion(root) + 1
-        foldState(root, v - 1).tokens.get(op).getOrElse {
+        snapshot(root, v - 1).txns.get(token).getOrElse {
           // same rebase rule as appendImpl: a mismatched batch must not
           // silently become the table's latest metaData
           val unified = unifiedSchema(root, df.schema, evolve = false, "appendOnce")
-          commit(root, v, op, adds, Seq.empty,
+          commit(root, v, s"append#$token", adds, Seq.empty,
             schemaJson = Some(unified.json), txn = Some((token, v)),
             partCols = pcs)
           v
@@ -324,7 +320,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
   def merge(spark: SparkSession, delta: DataFrame, root: String,
             keys: Seq[String], cdf: Boolean = false): Long = casRetry("merge") {
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     // a delta narrower than an evolved table would silently drop the new
     // columns from the carried rows — refuse shape drift here
     readMeta(root).foreach { case (cur, _) =>
@@ -362,7 +358,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     // compared a derived metadata string per row and pruned nothing at
     // the reader — every candidate file was re-scanned to rewrite the
     // touched subset
-    val byFileCow = candidates.map(a => (a.file, a)).toMap
+    val byFileCow = addIndex(root, candidates)
     def touchedStruct(files: Seq[String], as: String) =
       readFilesTagged(spark, root, files.map(byFileCow), v - 1)
         .select(struct(cols.map(col): _*).as(as))
@@ -475,7 +471,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     * N merges it zero times more, which is what lets
     * [[graft.streaming.TxnUpsertSink]] land a CDC changelog as keyed
     * upserts with exactly-once CONTENT. The token ledger rides the same
-    * checkpointed fold as appendOnce's (`merge-dv#` ops), so redelivery
+    * checkpointed fold as appendOnce's (`txn` appIds prefixed `merge-dv#`), so redelivery
     * detection stays O(checkpoint + tail) at any history length. */
   def mergeDvOnce(spark: SparkSession, delta: DataFrame, root: String,
                   keys: Seq[String], token: String, cdf: Boolean = false,
@@ -483,16 +479,18 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
                   driverDvBudgetBytes: Long = DvDriverBudgetBytes): Long = {
     require(token.forall(c => c >= ' '),
       s"mergeDvOnce token must not contain control characters: ${token.trim}")
-    val op = s"merge-dv#$token"
-    def existing: Option[Long] =
-      foldState(root, latestVersion(root)).tokens.get(op)
+    def existing: Option[Long] = snapshot(root).txns.get(MergeDvLedger + token)
     existing.getOrElse(casRetry("mergeDvOnce") {
       // the same token may have won a concurrent race — re-check inside
       // the CAS loop so redelivery never double-merges
       existing.getOrElse(mergeDvBody(spark, delta, root, keys, cdf,
-        rewriteFraction, driverDvBudgetBytes, op, Some(token)))
+        rewriteFraction, driverDvBudgetBytes, s"merge-dv#$token", Some(token)))
     })
   }
+
+  /** appId prefix of [[mergeDvOnce]]'s `txn` actions — keeps its ledger
+    * apart from [[appendOnce]]'s, whose appId is the bare token. */
+  private[sources] val MergeDvLedger = "merge-dv#"
 
   private[sources] def mergeDvBody(spark: SparkSession, delta: DataFrame, root: String,
                           keys: Seq[String], cdf: Boolean,
@@ -502,14 +500,15 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     require(rewriteFraction > 0 && rewriteFraction <= 1,
       s"rewriteFraction must be in (0,1], got $rewriteFraction")
     val v = latestVersion(root) + 1
-    require(v > 0, s"$root is not a TxnTable (no _txn_log)")
+    require(v > 0, s"$root is not a TxnTable (no _delta_log)")
     // exactly-once: the token-ledger check shares THIS claim's snapshot
     // (v − 1) — checking "at latest" outside would be the appendOnce
     // TOCTOU, where a racer's commit between check and claim lands the
     // same token twice. If a racer claims v first, our CAS fails and the
     // retry re-enters here seeing their token.
-    if (token.isDefined) {
-      val prior = foldState(root, v - 1).tokens.get(op)
+    val appId = token.map(MergeDvLedger + _)
+    appId.foreach { id =>
+      val prior = snapshot(root, v - 1).txns.get(id)
       if (prior.isDefined) return prior.get
     }
     readMeta(root).foreach { case (cur, _) =>
@@ -541,7 +540,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
       val schemaOut = readMeta(root).map(_._1).getOrElse(delta.schema)
       commit(root, v, op, adds, Seq.empty,
         schemaJson = Some(schemaOut.json), partCols = pcs, cdc = cdcAdds,
-        txn = token.map(t => (t, v)))
+        txn = appId.map(id => (id, v)))
       return v
     }
     val cur = readFilesTagged(spark, root, candidates, v - 1, rowIndex = true)
@@ -553,7 +552,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
       cur.join(dKeys, onKeys, "left_semi")
         .select(col("_file").cast("string"), col("_ri").cast("long")),
       "mergeDv", driverDvBudgetBytes).sortBy(_._1)
-    val byFile = candidates.map(a => (a.file, a)).toMap
+    val byFile = addIndex(root, candidates)
     // lightly-hit files keep their bytes and gain a bitmap; files past the
     // threshold (counting what earlier DVs already shaved) rewrite clean
     val (dvSide, cowSide) = matched.partition { case (f, _, card) =>
@@ -621,7 +620,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     val touchedSet = touchedAll.toSet
     commit(root, v, op, dataAdds ++ dvReadds, touchedAll.sorted,
       schemaJson = Some(schemaOut.json), partCols = pcs, cdc = cdcAdds,
-      extraConfig = withCfg, txn = token.map(t => (t, v)),
+      extraConfig = withCfg, txn = appId.map(id => (id, v)),
       removeDvs = dvTombstones(candidates.filter(a => touchedSet(a.file))))
     v
   }

@@ -339,10 +339,7 @@ class GraftSqlParser(spark: SparkSession, delegate: ParserInterface)
         GraftDmlCommand("describe-history", out, () =>
           TxnTable.historySummary(spark, root).collect().toSeq.map(r =>
             new GenericInternalRow(Array[Any](r.getLong(0),
-              // null when a version's mirror entry is unavailable —
-              // the row still lists, matching history()'s tolerance
-              Option(r.getTimestamp(1))
-                .map(t => UTF8String.fromString(t.toString)).orNull,
+              UTF8String.fromString(r.getTimestamp(1).toString),
               UTF8String.fromString(r.getString(2)),
               r.getInt(3).toLong, r.getInt(4).toLong, r.getInt(5).toLong))))
       }.getOrElse(delegate.parsePlan(sqlText))

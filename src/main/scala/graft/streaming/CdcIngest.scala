@@ -25,8 +25,12 @@ import graft.model.Schemas
   *     exists, file/rate/memory sources otherwise — the reference itself
   *     falls back to a rate source, SaveDelta.scala:123-127).
   *
-  * Update/delete/tombstone envelopes carry no `payload.after.id` and are
-  * dropped by the P4 filter — the reference's exact semantics (risk 7).
+  * Only creates reach the append sink — the reference's semantics (risk
+  * 7): delete/tombstone envelopes carry no `payload.after.id` and fall to
+  * the P4 filter, and updates (`op` = `u`, which DO carry `after`) are
+  * dropped by their op, or an edited activity would append a second row
+  * under the same id. Envelopes without an `op` (snapshot-less producers)
+  * count as creates.
   */
 object CdcIngest {
 
@@ -36,6 +40,11 @@ object CdcIngest {
   def parseEnvelope(raw: DataFrame): DataFrame =
     raw
       .select(from_json(col("value").cast("string"), Schemas.envelopeSchema).as("env"))
+      // P4 + creates only, over ONE reference to the payload: the optimizer
+      // pushes this filter below the parse, where every reference re-parses
+      // the JSON
+      .filter(exists(array(col("env.payload")), p =>
+        p("after")("id").isNotNull && (p("op").isNull || !p("op").isin("u", "d"))))
       .select(
         col("env.payload.after.id").as("id"),
         col("env.payload.after.id_employee").as("id_employee"),
@@ -45,7 +54,6 @@ object CdcIngest {
         col("env.payload.after.activity_duration").as("activity_duration"),
         col("env.payload.after.distance").cast("double").as("distance"),
         col("env.payload.after.comment").as("comment"))
-      .filter(col("id").isNotNull) // P4: drops non-inserts and garbage
 
   /** Start the append ingest into a checkpointed sink
     * (ref: SaveDelta.scala:157-163 — outputMode append, 30 s processing-time

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import graft.sources.TxnTable
 
-/** The Delta-protocol interop contract: every TxnTable commit mirrors into
-  * an OPEN-format `_delta_log/%020d.json` (delta.io PROTOCOL.md) that an
+/** The Delta-protocol interop contract: every TxnTable commit IS one
+  * OPEN-format `_delta_log/%020d.json` (delta.io PROTOCOL.md) that an
   * EXTERNAL reader could fold without this library. This suite plays that
   * external reader: it parses the action JSON by hand (no TxnTable fold
   * involved), reconstructs each version's live-file snapshot, reads those
@@ -122,14 +122,6 @@ class DeltaLogSpec extends AnyFunSuite {
     val txn = Files.readAllLines(logs(1)._2).asScala.find(_.contains("\"txn\":")).get
     assert(field(txn, "appId").contains("app-42"), txn)
     assert(ids(readFold(root, 1)) == (1L to 6L))
-  }
-
-  test("delta log and txn log advance in lockstep") {
-    val root = tbl()
-    TxnTable.append(df(1 to 3), root)
-    TxnTable.overwrite(df(7 to 9), root)
-    val deltaVs = logFiles(root).map(_._1)
-    assert(deltaVs == (0L to TxnTable.latestVersion(root)), deltaVs)
   }
 
   test("checkpoint parquet + _last_checkpoint let a reader fold O(1) files, not O(versions)") {

@@ -129,7 +129,7 @@ class DvTableSpec extends AnyFunSuite {
     TxnTable.append(df(200 to 205), root)                  // v10 → checkpoints
     val expect = ((1L to 90L).filterNot(_ % 7 == 0) ++ (200L to 205L)).sorted
     assert(ids(TxnTable.read(spark, root)) == expect)
-    // the mirror checkpoint carries the descriptor
+    // the checkpoint carries the descriptor
     val cp = Paths.get(root, "_delta_log", f"${10L}%020d.checkpoint.parquet")
     assert(Files.exists(cp))
     val cpDv = spark.read.parquet(cp.toString)

@@ -403,7 +403,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       val files = FsTest.walk(java.nio.file.Paths.get(root)).iterator().asScala
         .map(_.toString).toSeq
       assert(files.exists(_.endsWith(".parquet")), "data files were deleted")
-      assert(files.exists(_.contains("_txn_log.dropped-")), files.take(5))
+      assert(files.exists(_.contains("_delta_log.dropped-")), files.take(5))
       // drop + re-create round-trips
       spark.sql("CREATE TABLE graft.dropt (id BIGINT, payload STRING)")
       spark.sql("INSERT INTO graft.dropt VALUES (9, 'x')")

@@ -159,15 +159,19 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     TxnTable.optimize(spark, rootA)
     spark.sql("OPTIMIZE graft.twin_sql")
 
-    // log equality modulo the generated tokens (file names, sizes)
+    // log equality modulo the generated values: file names, sizes,
+    // timestamps and the root-derived table id
     import scala.jdk.CollectionConverters._
     def normLog(root: String): Seq[String] = {
-      val dir = java.nio.file.Paths.get(root, "_txn_log")
+      val dir = java.nio.file.Paths.get(root, "_delta_log")
       FsTest.list(dir).iterator().asScala.toSeq
         .filter(_.getFileName.toString.endsWith(".json")).sortBy(_.getFileName.toString)
         .flatMap(p => Files.readAllLines(p).asScala)
         .map(_.replaceAll("(data|cdc)/v[0-9]+-[0-9a-f]{8}/[^\"]*", "$1/vX/F")
-          .replaceAll("\"bytes\":[0-9]+", "\"bytes\":0"))
+          .replaceAll("\"size\":[0-9]+", "\"size\":0")
+          .replaceAll("\"(timestamp|modificationTime|deletionTimestamp|createdTime)\":[0-9]+",
+            "\"$1\":0")
+          .replaceAll("\"id\":\"[0-9a-f-]{36}\"", "\"id\":\"ID\""))
     }
     assert(normLog(rootA) == normLog(rootB),
       "SQL DML must drive the identical engine commit for commit")
@@ -283,7 +287,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     try spark.sql("DROP TABLE graft.swp")
     finally spark.conf.unset("graft.catalog.allowDrop")
     val rows2 = TxnTable.sweepStaging(root, System.currentTimeMillis())
-    assert(rows2.count(_.kind == "dropped") == 2) // _txn_log + _delta_log
+    assert(rows2.count(_.kind == "dropped") == 1) // the renamed _delta_log
     assert(rows2.filter(_.kind == "dropped").forall(e => !e.reclaimed && e.bytes > 0))
   }
 

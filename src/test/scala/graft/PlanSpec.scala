@@ -536,4 +536,14 @@ class PlanSpec extends AnyFunSuite {
     cachedSingleScan(executed(TextAnalysis.mrr(spark, sf)))
   }
 
+  test("the bytes-aware spread never widens past the core count") {
+    // local[2]: the floor of 4 must not lift the width above 2 cores
+    assert(Materialize.spreadWidth(2, 10L << 20) == 2)
+    assert(Materialize.spreadWidth(2, 1L) == 2)
+    assert(Materialize.spreadWidth(2, -1L) == 2) // unknown size: full width
+    // enough cores: floored at 4, one partition per 64 KiB, capped at cores
+    assert(Materialize.spreadWidth(32, 1L) == 4)
+    assert(Materialize.spreadWidth(32, 8L * Materialize.SpreadBytesPerPart) == 8)
+    assert(Materialize.spreadWidth(32, 1L << 30) == 32)
+  }
 }

@@ -191,6 +191,17 @@ class StreamingSpec extends AnyFunSuite {
       spark.streams.removeListener(monitor)
     }
   }
+
+  test("a Debezium update envelope does not append a second row for its id") {
+    import spark.implicits._
+    def withOp(op: String, duration: Int) =
+      s"""{"payload": {"op": "$op", "after": {"id": 5, "id_employee": 42, "start_datetime": 1718000000000000, "sport_type": "Yoga", "activity_duration": $duration}}}"""
+    val rows = CdcIngest.parseEnvelope(Seq(withOp("c", 600), withOp("u", 900),
+      withOp("d", 0), good2).toDF("value")).select("id", "activity_duration").collect()
+    // the create and the op-less envelope land; the update and delete do not
+    assert(rows.map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
+      Seq((2, 3600), (5, 600)), rows.toSeq)
+  }
 }
 
 /** Deterministic notification sink (the Slack webhook stand-in). */

@@ -462,7 +462,7 @@ class TxnTableSpec extends AnyFunSuite {
     TxnTable.append(df(1 to 3), root)
     assert(TxnTable.latestVersion(root) == 0L)
     // the single-writer guard: re-creating version 0 is refused
-    val log = java.nio.file.Paths.get(root, "_txn_log")
+    val log = java.nio.file.Paths.get(root, "_delta_log")
     assert(FsTest.list(log).count() == 1)
   }
 
@@ -507,7 +507,7 @@ class TxnTableSpec extends AnyFunSuite {
     // the delta's partition
     after.collect { case (f, pv) if !before.map(_._1).contains(f) =>
       assert(pv.get("shard").contains("2"), s"merge wrote outside shard 2: $f -> $pv") }
-    // the open-format mirror's merge commit records partitionValues too
+    // the open-format log's merge commit records partitionValues too
     val v1 = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(root, "_delta_log", f"${1L}%020d.json"))
     assert(v1.asScala.exists(l =>
@@ -568,8 +568,8 @@ class TxnTableSpec extends AnyFunSuite {
     val (kept, skipped) = TxnTable.skippingReport(root, col("id") >= 200L)
     assert(skipped > 0, s"checkpointed stats must still prune (kept=$kept)")
     // checkpoints are DERIVED state: deleting them changes nothing but cost
-    FsTest.list(java.nio.file.Paths.get(root, "_txn_log"))
-      .iterator().asScala.filter(_.getFileName.toString.endsWith(".ckpt"))
+    FsTest.list(java.nio.file.Paths.get(root, "_delta_log"))
+      .iterator().asScala.filter(_.getFileName.toString.endsWith(".checkpoint.parquet"))
       .toSeq.foreach(java.nio.file.Files.delete(_))
     assert(TxnTable.foldReport(root) == (None, 12))
     assert(ids(TxnTable.read(spark, root)) ==
@@ -599,7 +599,7 @@ class TxnTableSpec extends AnyFunSuite {
     // appends synthesize inserts from their own add files — whole range
     val full = TxnTable.changeFeedIncremental(spark, root, -1L, 2L)
     assert(full.where("_commit_version = 0 and _change_type = 'insert'").count() == 50)
-    // the open-format mirror carries the protocol's cdc action
+    // the open-format log carries the protocol's cdc action
     val v1 = Files.readAllLines(
       java.nio.file.Paths.get(root, "_delta_log", f"${1L}%020d.json")).asScala
     assert(v1.exists(_.startsWith("""{"cdc":""")), v1)
@@ -661,8 +661,7 @@ class TxnTableSpec extends AnyFunSuite {
     TxnTable.appendOnce(df(101 to 103), root, "tok-x")   // v10 → checkpoint
     TxnTable.append(df(200 to 201), root)                // v11 (tail)
     val expired = TxnTable.expireLog(root)
-    assert(expired.exists(_.startsWith("_txn_log/")) &&
-      expired.exists(_.startsWith("_delta_log/")), expired)
+    assert(expired.nonEmpty && expired.forall(_.startsWith("_delta_log/")), expired)
     // the snapshot and everything at/above the checkpoint still read
     assert(ids(TxnTable.read(spark, root)) == ((1L to 103L) ++ (200L to 201L)).sorted)
     assert(ids(TxnTable.readVersion(spark, root, 10)) == (1L to 103L))
@@ -831,7 +830,7 @@ class TxnTableSpec extends AnyFunSuite {
     // merge validates its delta too
     intercept[IllegalArgumentException](TxnTable.merge(spark,
       Seq((-9L, "bad")).toDF("id", "payload"), root, Seq("id")))
-    // the mirror upgraded to writer 3 and carries the configuration
+    // the log's protocol upgraded to writer 3 and carries the configuration
     val logs = FsTest.list(java.nio.file.Paths.get(root, "_delta_log"))
       .iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
       .flatMap(p => Files.readAllLines(p).asScala).toSeq
@@ -861,5 +860,74 @@ class TxnTableSpec extends AnyFunSuite {
     // control characters are refused at the door (they would split the line)
     intercept[IllegalArgumentException](
       TxnTable.appendOnce(df(6 to 7), root, "bad\ntoken"))
+  }
+
+  test("a writer dying right after the commit point leaves the whole commit") {
+    import spark.implicits._
+    val root = tbl()
+    TxnTable.append(df(1 to 3), root)                                   // v0
+    // publishes the version, then dies before anything after the claim runs
+    graft.sources.CommitLock.overrideLock = Some(new graft.sources.CommitLock {
+      override def claim(dst: java.nio.file.Path, tmp: java.nio.file.Path): Boolean = {
+        graft.sources.HardLinkLock.claim(dst, tmp)
+        throw new IllegalStateException("writer died after the commit point")
+      }
+    })
+    try intercept[IllegalStateException](TxnTable.appendEvolve(
+      Seq((4L, "v4", 1.5)).toDF("id", "payload", "x"), root))           // v1
+    finally graft.sources.CommitLock.overrideLock = None
+    assert(TxnTable.latestVersion(root) == 1L)
+    // the evolved column is part of the committed snapshot
+    val snap = TxnTable.read(spark, root)
+    assert(snap.columns.toSeq == Seq("id", "payload", "x"), snap.columns.toSeq)
+    assert(snap.where("id = 4").select("x").as[Double].collect().toSeq == Seq(1.5))
+    // DESCRIBE HISTORY lists it with its operation and timestamp, and that
+    // timestamp time-travels to it
+    val h = TxnTable.historySummary(spark, root).where("version = 1").collect()
+    assert(h.length == 1 && h.head.getString(2) == "append", h.toSeq)
+    val ts = h.head.getTimestamp(1).getTime
+    assert(TxnTable.versionAsOf(root, ts) == 1L)
+    assert(ids(TxnTable.readTimestamp(spark, root, ts)) == (1L to 4L))
+    // the next append in the committed schema lands on top of it
+    assert(TxnTable.append(Seq((5L, "v5", 2.5)).toDF("id", "payload", "x"), root) == 2L)
+    assert(ids(TxnTable.read(spark, root)) == (1L to 5L))
+    // one log: nothing but `_delta_log` records the table
+    assert(!Files.exists(java.nio.file.Paths.get(root, "_txn_log")))
+  }
+
+  test("reading a snapshot runs no Spark job, also when seeded from a checkpoint") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val root = tbl()
+    (0 until 12).foreach(i => TxnTable.append(df(i * 10 + 1 to i * 10 + 10), root)) // v0..v11
+    assert(TxnTable.foldReport(root) == (Some(10L), 1), "the read must seed from v10")
+    val group = s"snapshot-read-${System.nanoTime()}"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(started.put)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "snapshot reads")
+      val adds = TxnTable.liveAddsForTest(root)
+      val below = TxnTable.liveAddsForTest(root, 4L)
+      val ddl = TxnTable.showCreate(root, "t")            // schema + config
+      val pruned = TxnTable.skippingReport(root, col("id") > 100L)
+      // a sentinel job in a sibling group: the bus delivers job starts in
+      // order, so once it arrives every earlier start has been seen
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val seen = Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != group + "-sentinel").toList
+      assert(seen.isEmpty, s"snapshot reads ran ${seen.size} Spark job(s)")
+      assert(below.nonEmpty && below.size < adds.size && ddl.contains("payload") &&
+        pruned._2 > 0 && pruned._1 + pruned._2 == adds.size, (adds.size, below.size, pruned))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
