@@ -106,7 +106,7 @@ object Bench {
       (infos.map(_.memSize).sum / 1e6, infos.map(_.diskSize).sum / 1e6,
         infos.map(_.numCachedPartitions.toLong).sum)
     }
-    val results0 = SparkEntry.queries.keys.toSeq.sorted
+    val results = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n))).map { n =>
       val times = (1 to runs).map(_ => runOnce(n))
       val (memMb, diskMb, blocks) = storageNow()
@@ -114,42 +114,7 @@ object Bench {
       // artifact BUILD cost from the read path the oracle comparison sees
       (n, times.last, times.head, memMb, diskMb, blocks)
     }
-    // Self-adjudication (round-16 verdict): a transient neighbor can spike
-    // a handful of queries 3-6x and the committed record then needs a
-    // same-box forensic A/B to clear the code. Instead, compare each
-    // steady time against the PREVIOUS committed record and re-run the 3
-    // worst regressions once more at the (now warmer, likely quieter)
-    // suite tail; a re-run that lands near the old number replaces the
-    // spike. A real regression reproduces and stays.
     val mapPath = java.nio.file.Paths.get("BENCH_QUERIES.json").toAbsolutePath
-    val prevQueries: Map[String, Double] =
-      if (!java.nio.file.Files.exists(mapPath)) Map.empty
-      else {
-        val txt = java.nio.file.Files.readString(mapPath)
-        val obj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-        obj.toSeq.flatMap(
-          """"([^"]+)":([0-9.\-]+)""".r.findAllMatchIn(_)
-            .map(m => m.group(1) -> m.group(2).toDouble)).toMap
-      }
-    val suspects = results0
-      .flatMap { r => prevQueries.get(r._1).map(p => (r, p)) }
-      .filter { case (r, p) => p >= 0.3 && r._2 >= 0 && r._2 > p * 1.5 }
-      .sortBy { case (r, p) => -(r._2 / p) }
-      .take(3)
-    // BOTH samples go in the record (first=suite time, second=re-run) so a
-    // cleared spike stays auditable and a one-sided min can never hide a
-    // real-but-flaky regression from a reader of the JSON.
-    val rerunPairs: Map[String, (Double, Double)] = suspects.map { case (r, p) =>
-      val t = runOnce(r._1)
-      System.err.println(f"[bench] re-adjudicated ${r._1}: ${r._2}%.2f s " +
-        f"(prev $p%.2f) -> $t%.2f s")
-      r._1 -> (r._2, t)
-    }.toMap
-    val rerun: Map[String, Double] = rerunPairs.map { case (n, (orig, t)) =>
-      n -> (if (t >= 0) math.min(t, orig) else orig)
-    }
-    val results = results0.map(r =>
-      rerun.get(r._1).map(t => r.copy(_2 = t)).getOrElse(r))
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val steady = results.map(r => r._1 -> r._2)
@@ -165,9 +130,6 @@ object Bench {
     val lt = loadTriple()
     val loadField = f""","load_avg_start":$loadStart%.2f,"load_avg_end":${loadAvg()}%.2f,""" +
       f""""load_1_5_15":[${lt.map(v => f"$v%.2f").mkString(",")}],""" +
-      s""""readjudicated":[${rerun.keys.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""readjudications":${rerunPairs.toSeq.sortBy(_._1).map { case (n, (o, t)) =>
-        "\"" + n + "\":[" + f"$o%.3f,$t%.3f]" }.mkString("{", ",", "}")},""" +
       s""""degraded":$degraded"""
     if (only.isEmpty)
       java.nio.file.Files.writeString(

@@ -6,15 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor-side deletion-vector probe: `deleted(file_name, row_index)`.
+/** Executor-side deletion-vector probe: `deleted(file_path, row_index)`.
   *
   * The merge-on-read scan filters DV-marked rows with this expression over
-  * `_metadata.file_name` + `_metadata.row_index` — an O(1) bitmap probe
+  * `_metadata.file_path` + `_metadata.row_index` — an O(1) bitmap probe
   * per row, fully inside whole-stage codegen. The alternative (anti-join
   * against exploded deleted positions) shuffles O(deleted rows) and breaks
   * codegen; a DV can mark millions of rows, the probe never cares.
   *
-  * The serialized bitmaps ride the plan as a small per-file map (file name
+  * The serialized bitmaps ride the plan as a small per-file map (file path
   * → DV blob bytes); each task deserializes lazily and memoizes the
   * last-hit file, so a scan partition (one file at a time) pays one map
   * lookup per FILE, not per row. */
@@ -47,7 +47,7 @@ case class DvRowDeleted(file: Expression, rowIndex: Expression,
     copy(file = newLeft, rowIndex = newRight)
 }
 
-/** Lazily-deserializing file-name → deletion-bitmap table (see
+/** Lazily-deserializing file-path → deletion-bitmap table (see
   * [[DvRowDeleted]]). The blob map ships as a BROADCAST, not inside the
   * serialized expression — a plan is re-serialized per task, a broadcast
   * lands once per executor, and at 100 TB a DV map can be hundreds of MB.

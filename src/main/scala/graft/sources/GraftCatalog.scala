@@ -709,8 +709,7 @@ final case class GraftScan(root: String, version: Long,
       else prune(static, runtimeFilters.toSeq)
     // a fully-deleted file contributes nothing — zero partitions is a
     // valid DSv2 scan (schema comes from readSchema)
-    val kept = kept0.filterNot(a => a.dv.exists(d =>
-      a.stats.exists(TxnTable.decodeStats(_).numRecords == d.cardinality)))
+    val kept = kept0.filterNot(TxnTable.fullyDeleted)
     GraftCatalog.lastScanReport = Some(GraftCatalog.ScanReport(
       root, version, kept.size, total,
       (pushed ++ runtimeFilters).map(_.toString).toSeq, required.fieldNames.toSeq))
@@ -853,8 +852,7 @@ object GraftScan {
     }
     val out = new java.util.HashMap[NamedReference, ColumnStatistics]()
     required.fields.foreach { f =>
-      val pn = if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName") else f.name
+      val pn = TxnTable.physicalName(f)
       val mins = stats.map(_.minV.get(pn))
       val maxs = stats.map(_.maxV.get(pn))
       val nulls = stats.map(_.nullC.get(pn))
@@ -953,10 +951,6 @@ final class GraftVectorReader(p: GraftInputPartition)
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val required = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  private def physName(f: StructField): String =
-    if (f.metadata.contains("delta.columnMapping.physicalName"))
-      f.metadata.getString("delta.columnMapping.physicalName")
-    else f.name
   // partition columns are path-encoded (never in the data files); every
   // other requested column reads from the file (or null-fills)
   private val partIdx = required.fields.zipWithIndex
@@ -964,7 +958,7 @@ final class GraftVectorReader(p: GraftInputPartition)
   private val fileIdx = required.fields.zipWithIndex
     .filterNot { case (f, _) => p.partValues.contains(f.name) }
   private val physFile = StructType(fileIdx.map { case (f, _) =>
-    f.copy(name = physName(f), nullable = true) })
+    f.copy(name = TxnTable.physicalName(f), nullable = true) })
   private val partSchema = StructType(partIdx.map(_._1))
   private val partRow = new GenericInternalRow(partIdx.map { case (f, _) =>
     GraftCatalog.partConst(p.partValues(f.name), f.dataType) }.toArray[Any])
@@ -1081,11 +1075,7 @@ final class GraftRowReader(p: GraftInputPartition)
   import org.apache.parquet.schema.MessageType
 
   private val schema = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  private val physNames: Array[String] = schema.fields.map { f =>
-    if (f.metadata.contains("delta.columnMapping.physicalName"))
-      f.metadata.getString("delta.columnMapping.physicalName")
-    else f.name
-  }
+  private val physNames: Array[String] = schema.fields.map(TxnTable.physicalName)
   private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
     new org.apache.hadoop.fs.Path(p.path),
     GroupDecode.freshConf()))
@@ -1144,7 +1134,7 @@ final class GraftRowReader(p: GraftInputPartition)
       val f = schema.fields(i)
       vals(i) =
         if (requested == null || !requested.containsField(physNames(i)))
-          if (p.partValues.contains(f.name)) partConst(p.partValues(f.name), f.dataType)
+          if (p.partValues.contains(f.name)) GraftCatalog.partConst(p.partValues(f.name), f.dataType)
           else null
         else {
           val fi = requested.getFieldIndex(physNames(i))
@@ -1158,10 +1148,6 @@ final class GraftRowReader(p: GraftInputPartition)
     }
     new GenericInternalRow(vals)
   }
-
-  private def partConst(s: String, dt: DataType): Any =
-    GraftCatalog.partConst(s, dt)
-
 
   override def close(): Unit = reader.close()
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction => UFn}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,13 +47,12 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * touch the source (vacuum skips absolute entries). The usual
     * dev/test-sandbox shape: branch a 100 TB table in O(files) metadata.
     * PARTITIONED sources clone too: every re-add carries its
-    * partitionValues, the clone's metaData records the partition columns,
-    * and reads group by the SOURCE's version directories (each group's
-    * basePath re-attaches the path-encoded columns) — so the clone prunes
-    * partitions exactly like the source from birth. Source files vacuumed
-    * AWAY later make the clone's reads fail loudly, exactly like the
-    * source's own too-old time travel (pin the source's retention
-    * accordingly). */
+    * partitionValues and the clone's metaData records the partition
+    * columns, so the clone's reads scan its absolute re-adds as one
+    * relation with partition values off its own log, and prune partitions
+    * exactly like the source. Source files vacuumed AWAY later make the
+    * clone's reads fail loudly, exactly like the source's own too-old
+    * time travel (pin the source's retention accordingly). */
   def cloneShallow(srcRoot: String, dstRoot: String): Long = {
     require(latestVersion(srcRoot) >= 0, s"$srcRoot is not a TxnTable (no _delta_log)")
     require(latestVersion(dstRoot) < 0, s"$dstRoot already has a _delta_log")
@@ -119,37 +120,22 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
         "num_removed_files", "num_change_files")
   }
 
-  private[sources] def fileNameOf(f: String): String = {
-    val i = f.lastIndexOf('/')
-    if (i < 0) f else f.substring(i + 1)
-  }
+  /** A log entry's qualified `file:` URI: what [[TxnFileIndex]] lists and
+    * `_metadata.file_path` reads for it. */
+  private[sources] def fileUri(root: String, f: String): String =
+    TxnFileIndex.qualified(filePath(root, f)).toUri.toString
 
   /** file → descriptor for the DV-carrying members of a remove set, so
     * the log's remove actions name the instance they tombstone. */
   private[sources] def dvTombstones(adds: Seq[AddFile]): Map[String, DeletionVectors.DvDescriptor] =
     adds.flatMap(a => a.dv.map(a.file -> _)).toMap
 
-  /** The hive-layout scan group of a log entry: its `data/<vN-uuid>`
-    * version directory, resolved against whichever root the path lives
-    * under — the table's own for relative entries, the SOURCE's for a
-    * shallow clone's absolute re-adds. Each group scans with this as
-    * `basePath` so partition discovery re-attaches the path-encoded
-    * columns. (Partition dirs are `name=value`, so a bare `data` ancestor
-    * is unambiguous.) */
-  private[sources] def versionDirOf(root: String, f: String): String = {
-    var p = filePath(root, f).toAbsolutePath
-    while (p.getParent != null && (p.getParent.getFileName == null ||
-      p.getParent.getFileName.toString != "data")) p = p.getParent
-    require(p.getParent != null, s"no data/ ancestor in log entry $f")
-    p.toString
-  }
-
   /** Merge-on-read row filter: drop rows a live add's deletion vector
     * marks. None when no add carries a DV — non-DV tables pay zero (no
-    * metadata column, no probe, unchanged plan). Keyed by parquet file
-    * NAME (`_metadata.file_name`) — Spark part names embed a UUID, so the
-    * key is unique across version dirs and even across a clone's absolute
-    * re-adds. The probe is a codegen'd O(1) bitmap lookup per row
+    * metadata column, no probe, unchanged plan). Keyed by the file's URI
+    * (`_metadata.file_path`), never its name: one partitioned write gives
+    * every partition directory the same part-file names. The probe is a
+    * codegen'd O(1) bitmap lookup per row
     * ([[graft.functions.DvRowDeleted]]); deleted positions never join or
     * shuffle, which is what keeps a 10M-row DV as cheap as a 10-row one. */
   private[sources] def dvAliveFilter(spark: SparkSession, root: String,
@@ -158,26 +144,19 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     if (dvAdds.isEmpty) None
     else {
       val blobs = dvAdds.map { a =>
-        fileNameOf(a.file) -> DeletionVectors.readDvData(root, a.dv.get)
+        fileUri(root, a.file) -> DeletionVectors.readDvData(root, a.dv.get)
       }.toMap
       val lookup = new graft.functions.DvLookup(
         spark.sparkContext.broadcast(blobs))
       Some(org.apache.spark.sql.GraftColumnExpr.column(
         org.apache.spark.sql.catalyst.expressions.Not(
           graft.functions.DvRowDeleted(
-            org.apache.spark.sql.GraftColumnExpr.expr(col("_metadata.file_name")),
+            org.apache.spark.sql.GraftColumnExpr.expr(col("_metadata.file_path")),
             org.apache.spark.sql.GraftColumnExpr.expr(col("_metadata.row_index")),
             lookup))))
     }
   }
 
-  /** Read a set of live files, partition-aware: on a partitioned table the
-    * files group by their version directory and each group reads with that
-    * directory as `basePath`, so Spark's partition discovery re-attaches
-    * the path-encoded columns under the metaData schema's types; groups
-    * union by name. Unpartitioned tables take the single flat scan.
-    * Deletion-vector adds filter their marked rows out INSIDE each scan
-    * (the metadata columns don't survive a union). */
   /** An add whose deletion vector covers EVERY physical row is logically
     * empty — scanning it buys nothing (a fully-deleted 1 GB file would
     * still decode end-to-end just to probe every row away). */
@@ -185,45 +164,37 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     a.dv.exists(d => a.stats.exists(s =>
       decodeStats(s).numRecords == d.cardinality))
 
-  private[sources] def readFiles(spark: SparkSession, root: String,
-                        adds0: Seq[AddFile], asOf: Long = -1L): DataFrame = {
-    // drop logically-empty files, keeping one if EVERYTHING is deleted
-    // (its probe yields zero rows but the scan stays schema-correct)
-    val kept = adds0.filterNot(fullyDeleted)
-    val adds = if (kept.nonEmpty) kept else adds0.take(1)
-    val files = adds.map(_.file)
-    val alive = dvAliveFilter(spark, root, adds)
-    def dvf(df: DataFrame): DataFrame = alive.map(df.filter).getOrElse(df)
-    readMeta(root, asOf) match {
-      case Some((schema, pcs)) if pcs.nonEmpty =>
-        // data columns scan under their PHYSICAL names (partition columns
-        // never rename — their name IS the directory encoding)
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physicalName(f))))
-        files.groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
-              .select(schema.fields.toSeq.map(f =>
-                col(physicalName(f)).as(f.name)): _*)
-          }.reduce(_ unionByName _)
-      case Some((schema, _)) =>
-        // unified-schema scan: files an evolution predates simply lack the
-        // new columns and read back null for them. Under column mapping
-        // the scan uses the files' PHYSICAL names and the select re-attaches
-        // the logical ones — still one scan, zero extra I/O.
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physicalName(f), nullable = true)))
-        val scan = dvf(spark.read.schema(phys)
-          .parquet(files.map(f => filePath(root, f).toString): _*))
-        if (colMapping(schema).isEmpty) scan
-        else scan.select(schema.fields.toSeq.map(f =>
-          col(physicalName(f)).as(f.name)): _*)
-      case None =>
-        dvf(spark.read.parquet(files.map(f => filePath(root, f).toString): _*))
-    }
+  /** The one snapshot scan every TxnTable read builds on: a single file
+    * relation over a [[TxnFileIndex]] of the non-empty adds, so Spark
+    * neither lists nor stats a file and partition values come from the
+    * log. Data columns scan under their PHYSICAL names (plus any `hidden`
+    * physical fields) and come back under the metaData schema's logical
+    * names and order, followed by `extra`, which may read the `_metadata`
+    * columns. Files an evolution predates lack the new columns and read
+    * null for them; deletion-vector adds filter their marked rows out. An
+    * empty file list scans zero files under the same schema. */
+  private def scan(spark: SparkSession, root: String, adds: Seq[AddFile], asOf: Long,
+                   hidden: Seq[StructField], extra: Seq[Column]): DataFrame = {
+    val (schema, pcs) = readMeta(root, asOf).getOrElse(
+      sys.error(s"$root has no metaData"))
+    val kept = adds.filterNot(fullyDeleted)
+    val partSchema = StructType(pcs.map(schema(_)))
+    val dataSchema = StructType(schema.fields.filterNot(f => pcs.contains(f.name))
+      .map(f => f.copy(name = physicalName(f))) ++ hidden)
+    val rel = HadoopFsRelation(TxnFileIndex(root, kept, partSchema), partSchema,
+      org.apache.spark.sql.GraftColumnExpr.asNullable(dataSchema), None,
+      new ParquetFileFormat, Map.empty)(spark)
+    val df = spark.baseRelationToDataFrame(rel)
+    val alive = dvAliveFilter(spark, root, kept).map(df.filter).getOrElse(df)
+    if (pcs.isEmpty && colMapping(schema).isEmpty && extra.isEmpty) alive
+    else alive.select(schema.fields.toSeq.map(f =>
+      col(physicalName(f)).as(f.name)) ++ extra: _*)
   }
+
+  /** Read a set of live files as of `asOf`'s schema. */
+  private[sources] def readFiles(spark: SparkSession, root: String,
+                        adds: Seq[AddFile], asOf: Long = -1L): DataFrame =
+    scan(spark, root, adds, asOf, Nil, Nil)
 
   // ---- row tracking (stable row ids) ------------------------------------------
   // The protocol's rowTracking feature: every row gets a STABLE id —
@@ -290,40 +261,18 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
       .withColumnRenamed("_row_id", RowIdCol)
 
   private[sources] def readFilesRowId(spark: SparkSession, root: String,
-                             adds0: Seq[AddFile], asOf: Long): DataFrame = {
+                             adds: Seq[AddFile], asOf: Long): DataFrame = {
     import spark.implicits._
-    val kept = adds0.filterNot(fullyDeleted)
-    val adds = if (kept.nonEmpty) kept else adds0.take(1)
-    val alive = dvAliveFilter(spark, root, adds)
-    def dvf(df: DataFrame): DataFrame = alive.map(df.filter).getOrElse(df)
-    val (schema, pcs) = readMeta(root, asOf).getOrElse(
-      sys.error(s"$root has no metaData"))
-    // the scan schema carries the hidden materialized column as nullable:
-    // files without it (fresh appends) read null and fall back to
-    // baseRowId + row_index
-    val phys = StructType(schema.fields.map(f =>
-      f.copy(name = physicalName(f), nullable = true)) :+
-      StructField(RowIdCol, LongType, nullable = true))
-    val sel = schema.fields.toSeq.map(f => col(physicalName(f)).as(f.name)) ++ Seq(
-      col(RowIdCol).as("_mat_id"),
-      col("_metadata.file_name").as("_fn"),
-      col("_metadata.row_index").as("_rix"))
-    val scanned =
-      if (pcs.nonEmpty)
-        adds.map(_.file).groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
-              .select(sel: _*)
-          }.reduce(_ unionByName _)
-      else
-        dvf(spark.read.schema(phys)
-          .parquet(adds.map(f => filePath(root, f.file).toString): _*))
-          .select(sel: _*)
+    // the scan carries the hidden materialized column: files without it
+    // (fresh appends) read null and fall back to baseRowId + row_index
+    val scanned = scan(spark, root, adds, asOf,
+      hidden = Seq(StructField(RowIdCol, LongType)),
+      extra = Seq(col(RowIdCol).as("_mat_id"),
+        col("_metadata.file_path").as("_fn"),
+        col("_metadata.row_index").as("_rix")))
     // per-file fresh-id base, broadcast — O(files) rows, never data-sized
     val baseDf = adds.map(a =>
-      (fileNameOf(a.file), a.baseRowId.getOrElse(-1L))).toDF("_fn2", "_base")
+      (fileUri(root, a.file), a.baseRowId.getOrElse(-1L))).toDF("_fn2", "_base")
     scanned.join(broadcast(baseDf), col("_fn") === col("_fn2"), "left")
       .withColumn("_row_id",
         coalesce(col("_mat_id"), when(col("_base") >= 0L, col("_base") + col("_rix"))))
@@ -333,53 +282,26 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
   /** [[readFiles]] plus a `_file` column carrying each row's source file as
     * a ROOT-RELATIVE path (the commit log's file key) — the attribution
     * column copy-on-write MERGE/DELETE group their touched-file analysis
-    * on. The `_metadata.file_path` URI must be captured INSIDE each scan
-    * (it does not survive a union of per-partition-group scans) and is
-    * normalized to the log's key space right there, so every downstream
-    * comparison is an exact Set lookup — no O(live × touched) suffix
-    * scans on the driver. */
+    * on. The `_metadata.file_path` URI is normalized to the log's key
+    * space right in the scan, so every downstream comparison is an exact
+    * Set lookup — no O(live × touched) suffix scans on the driver. */
   private[sources] def readFilesTagged(spark: SparkSession, root: String,
-                              adds0: Seq[AddFile], asOf: Long,
+                              adds: Seq[AddFile], asOf: Long,
                               rowIndex: Boolean = false): DataFrame = {
-    val kept = adds0.filterNot(fullyDeleted)
-    val adds = if (kept.nonEmpty) kept else adds0.take(1)
-    val files = adds.map(_.file)
-    val alive = dvAliveFilter(spark, root, adds)
-    def dvf(df: DataFrame): DataFrame = alive.map(df.filter).getOrElse(df)
     val rootAbs = Paths.get(root).toAbsolutePath.toString
-    // file_path is a file: URI whose slash count varies by renderer
-    // (Hadoop says file:/p, java.nio file:///p) — collapse the scheme to a
-    // bare absolute path first, then strip the table root
+    // file_path is a percent-encoded file: URI whose slash count varies by
+    // renderer (Hadoop says file:/p, java.nio file:///p) — collapse the
+    // scheme to a bare absolute path, decode it (escaping '+' first, which
+    // a URI keeps literal), then strip the table root
     val relExpr = regexp_replace(
-      regexp_replace(col("_metadata.file_path"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"),
+      url_decode(regexp_replace(regexp_replace(col("_metadata.file_path"),
+        "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"), "\\+", "%2B")),
       "^" + java.util.regex.Pattern.quote(rootAbs) + "/", "")
     // merge-on-read DELETE needs each row's physical position too
-    val extra = relExpr.as("_file") +:
-      (if (rowIndex) Seq(col("_metadata.row_index").as("_ri")) else Nil)
-    readMeta(root, asOf) match {
-      case Some((schema, pcs)) if pcs.nonEmpty =>
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physicalName(f))))
-        files.groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
-              .select(schema.fields.toSeq.map(f =>
-                col(physicalName(f)).as(f.name)) ++ extra: _*)
-          }.reduce(_ unionByName _)
-      case Some((schema, _)) =>
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physicalName(f), nullable = true)))
-        dvf(spark.read.schema(phys)
-          .parquet(files.map(f => filePath(root, f).toString): _*))
-          .select(schema.fields.toSeq.map(f =>
-            col(physicalName(f)).as(f.name)) ++ extra: _*)
-      case None =>
-        dvf(spark.read.parquet(files.map(f => filePath(root, f).toString): _*))
-          .select(col("*") +: extra: _*)
-    }
+    scan(spark, root, adds, asOf, Nil, relExpr.as("_file") +:
+      (if (rowIndex) Seq(col("_metadata.row_index").as("_ri")) else Nil))
   }
+
   /** Change data feed between two committed versions: the keyed row-level
     * diff an incremental consumer applies to stay in sync. Emits the table
     * columns plus `_change_type` ∈ insert | delete | update_preimage |
@@ -409,6 +331,51 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     events.select(cols.map(c => col(s"e.r.$c")) :+ col("e.t").as("_change_type"): _*)
   }
 
+  /** file → serialized delta bitmap (new DV minus the tombstoned one) of
+    * one delete-dv commit — the positions that commit deleted. Shared by
+    * the batch CDF and the txn-tail streaming source. */
+  private[sources] def dvDeltaBlobs(root: String, v: Long): Map[String, Array[Byte]] = {
+    val acts = readCommit(root, v).actions
+    val newAdds = acts.collect { case Action(_, _, "add", a) => a }
+    val oldDv = acts.collect { case Action(_, _, "remove", a) => a.file -> a.dv }.toMap
+    newAdds.flatMap { a =>
+      a.dv.map { d =>
+        val bm = DeletionVectors.readBitmap(root, d)
+        oldDv.get(a.file).flatten.foreach(od =>
+          bm.andNot(DeletionVectors.readBitmap(root, od)))
+        a.file -> bm.serialize()
+      }
+    }.toMap
+  }
+
+  /** The rows one delete-dv commit marked, synthesized from the bitmap
+    * delta between each re-added file's new DV and the removed instance's
+    * old one (the tombstone carries it). Reads only the touched files and
+    * emits only delta-marked positions — the O(delta) CDF merge-on-read
+    * deletes get for free, no stored change files. None for a no-match
+    * audit commit. */
+  private[sources] def dvDeltaRows(spark: SparkSession, root: String, v: Long,
+                          acts: Seq[Action]): Option[DataFrame] = {
+    val newAdds = acts.collect { case Action(_, _, "add", a) => a }
+    if (newAdds.isEmpty) return None
+    val deltaBlobs = dvDeltaBlobs(root, v)
+    if (deltaBlobs.isEmpty) return None
+    // scan the touched files WITHOUT their current DVs: the delta rows are
+    // deleted now, so the usual alive filter would drop exactly the rows
+    // this feed must emit
+    val bare = newAdds.map(_.copy(dv = None))
+    val taggedScan = readFilesTagged(spark, root, bare, v, rowIndex = true)
+    val lookup = new graft.functions.DvLookup(
+      spark.sparkContext.broadcast(deltaBlobs))
+    val marked = org.apache.spark.sql.GraftColumnExpr.column(
+      graft.functions.DvRowDeleted(
+        org.apache.spark.sql.GraftColumnExpr.expr(col("_file")),
+        org.apache.spark.sql.GraftColumnExpr.expr(col("_ri")), lookup))
+    Some(taggedScan.filter(marked).drop("_file", "_ri")
+      .withColumn("_change_type", lit("delete"))
+      .withColumn("_commit_version", lit(v)))
+  }
+
   /** INCREMENTAL change data feed over (fromV, toV]: one row per change
     * per COMMIT (table columns + `_change_type` + `_commit_version`),
     * assembled from O(delta) metadata + files — never a snapshot diff:
@@ -434,53 +401,6 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     * effects, at a cost proportional to what changed. Frames from before a
     * schema evolution are null-backfilled to the widest schema in the
     * range (`unionByName(allowMissingColumns)`). */
-  /** The rows one delete-dv commit marked, synthesized from the bitmap
-    * delta between each re-added file's new DV and the removed instance's
-    * old one (the tombstone carries it). Reads only the touched files and
-    * emits only delta-marked positions — the O(delta) CDF merge-on-read
-    * deletes get for free, no stored change files. None for a no-match
-    * audit commit. */
-  /** file → serialized delta bitmap (new DV minus the tombstoned one) of
-    * one delete-dv commit — the positions that commit deleted. Shared by
-    * the batch CDF and the txn-tail streaming source. */
-  private[sources] def dvDeltaBlobs(root: String, v: Long): Map[String, Array[Byte]] = {
-    val acts = readCommit(root, v).actions
-    val newAdds = acts.collect { case Action(_, _, "add", a) => a }
-    val oldDv = acts.collect { case Action(_, _, "remove", a) => a.file -> a.dv }.toMap
-    newAdds.flatMap { a =>
-      a.dv.map { d =>
-        val bm = DeletionVectors.readBitmap(root, d)
-        oldDv.get(a.file).flatten.foreach(od =>
-          bm.andNot(DeletionVectors.readBitmap(root, od)))
-        a.file -> bm.serialize()
-      }
-    }.toMap
-  }
-
-  private[sources] def dvDeltaRows(spark: SparkSession, root: String, v: Long,
-                          acts: Seq[Action]): Option[DataFrame] = {
-    val newAdds = acts.collect { case Action(_, _, "add", a) => a }
-    if (newAdds.isEmpty) return None
-    val deltaBlobs = dvDeltaBlobs(root, v)
-      .map { case (f, blob) => fileNameOf(f) -> blob }
-    if (deltaBlobs.isEmpty) return None
-    // scan the touched files WITHOUT their current DVs: the delta rows are
-    // deleted now, so the usual alive filter would drop exactly the rows
-    // this feed must emit
-    val bare = newAdds.map(_.copy(dv = None))
-    val taggedScan = readFilesTagged(spark, root, bare, v, rowIndex = true)
-    val lookup = new graft.functions.DvLookup(
-      spark.sparkContext.broadcast(deltaBlobs))
-    val marked = org.apache.spark.sql.GraftColumnExpr.column(
-      graft.functions.DvRowDeleted(
-        org.apache.spark.sql.GraftColumnExpr.expr(
-          regexp_extract(col("_file"), "[^/]+$", 0)),
-        org.apache.spark.sql.GraftColumnExpr.expr(col("_ri")), lookup))
-    Some(taggedScan.filter(marked).drop("_file", "_ri")
-      .withColumn("_change_type", lit("delete"))
-      .withColumn("_commit_version", lit(v)))
-  }
-
   def changeFeedIncremental(spark: SparkSession, root: String,
                             fromV: Long, toV: Long,
                             keys: Seq[String] = Seq.empty): DataFrame = {
@@ -593,9 +513,6 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     v
   }
 
-  /** Live-file inventory as of a version — the `.files` metadata-table
-    * analogue: one row per live file with size, row count, partition
-    * values, and the raw stats payload. Pure log fold, no data I/O. */
   /** SYMLINK MANIFEST export (the Hive `SymlinkTextInputFormat` layout
     * the open lakehouse formats generate for Presto/Trino/Athena-class
     * readers): `_symlink_format_manifest/[col=val/...]manifest` text
@@ -645,6 +562,9 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     }
   }
 
+  /** Live-file inventory as of a version — the `.files` metadata-table
+    * analogue: one row per live file with size, row count, partition
+    * values, and the raw stats payload. Pure log fold, no data I/O. */
   def files(spark: SparkSession, root: String, asOf: Long = -1L): DataFrame = {
     import spark.implicits._
     liveAdds(root, asOf).map { a =>
@@ -712,4 +632,60 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
       (x.version, c.timestamp, x.op, x.action, x.add.file, x.add.bytes, x.add.stats.orNull)))
       .toDF("version", "ts_millis", "op", "action", "file", "bytes", "stats")
   }
+}
+
+/** A snapshot's live adds as Spark's file index — Delta's log-backed
+  * index: each add's path, size and partition values come from the log,
+  * so no scan lists or stats a file. `listFiles` applies the static
+  * partition filters itself (the file scan never re-checks partition-only
+  * predicates on rows), bound by name to `partitionSchema` like Spark's
+  * own `PartitioningAwareFileIndex.prunePartitions`; dynamic pruning
+  * filters Spark applies to the returned directories' values. */
+private[sources] final case class TxnFileIndex(root: String, adds: Seq[AddFile],
+                                               partitionSchema: StructType)
+    extends FileIndex {
+  import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Predicate}
+
+  private lazy val partitions: Seq[(InternalRow, Seq[FileStatusWithMetadata])] = {
+    val key = (a: AddFile) => partitionSchema.fields.toSeq.map(f => a.partitionValues.get(f.name))
+    val statuses = adds.map(a => key(a) -> FileStatusWithMetadata(new FileStatus(
+      a.bytes, false, 0, 0, 0, TxnFileIndex.qualified(TxnTable.filePath(root, a.file)))))
+    val byKey = statuses.groupBy(_._1)
+    statuses.map(_._1).distinct.map { k =>
+      InternalRow.fromSeq(partitionSchema.fields.toSeq.zip(k).map { case (f, v) =>
+        v.map(GraftCatalog.partConst(_, f.dataType)).orNull
+      }) -> byKey(k).map(_._2)
+    }
+  }
+
+  override def rootPaths: Seq[HPath] = Seq(TxnFileIndex.qualified(Paths.get(root)))
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep: InternalRow => Boolean =
+      if (partitionFilters.isEmpty) _ => true
+      else Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+        case a: AttributeReference =>
+          val i = partitionSchema.fieldNames.indexOf(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      }).eval
+    partitions.collect { case (v, fs) if keep(v) => PartitionDirectory(v, fs) }
+  }
+
+  override def inputFiles: Array[String] =
+    partitions.flatMap(_._2.map(_.getPath.toUri.toString)).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = adds.map(_.bytes).sum
+
+  override def toString: String = s"TxnFileIndex(${adds.size} files)[$root]"
+}
+
+private[sources] object TxnFileIndex {
+  /** A local path as the qualified `file:` URI a listing reports. */
+  def qualified(p: Path): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path("file", null, p.toAbsolutePath.toString)
 }

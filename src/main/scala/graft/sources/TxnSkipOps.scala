@@ -320,9 +320,7 @@ private[sources] trait TxnSkipOps { self: TxnTable.type =>
     val adds = liveAdds(root, asOf)
     val meta = readMeta(root, asOf)
     val nameMap = meta.map(m => colMapping(m._1)).getOrElse(Map.empty)
-    val (kept0, _) = pruneAdds(adds, pred, nameMap, genSchema = meta.map(_._1))
-    // keep one file when everything pruned: a schema-bearing empty scan
-    val kept = if (kept0.nonEmpty) kept0 else adds.take(1)
+    val (kept, _) = pruneAdds(adds, pred, nameMap, genSchema = meta.map(_._1))
     val missing = kept.filterNot(a => Files.exists(filePath(root, a.file)))
     require(missing.isEmpty, s"readWhere references vacuumed files: " +
       missing.map(_.file).mkString(", "))

@@ -240,11 +240,7 @@ final class TxnTailReader(p: TxnTailPartition)
   // mapping a renamed column's files keep the stable physical name, and
   // the tail must stitch old-physical and new-logical files into ONE
   // seamless column (matching the batch scan), not emit nulls
-  private val physNames: Array[String] = schema.fields.map { f =>
-    if (f.metadata.contains("delta.columnMapping.physicalName"))
-      f.metadata.getString("delta.columnMapping.physicalName")
-    else f.name
-  }
+  private val physNames: Array[String] = schema.fields.map(TxnTable.physicalName)
   private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
     new org.apache.hadoop.fs.Path(p.path),
     GroupDecode.freshConf()))
@@ -291,7 +287,7 @@ final class TxnTailReader(p: TxnTailPartition)
           if (f.name == "_change_type" && p.changeType != null)
             UTF8String.fromString(p.changeType)
           else if (p.partValues.contains(f.name))
-            partConst(p.partValues(f.name), f.dataType)
+            GraftCatalog.partConst(p.partValues(f.name), f.dataType)
           else null
         else {
           val fi = fileSchema.getFieldIndex(physNames(i))
@@ -310,11 +306,6 @@ final class TxnTailReader(p: TxnTailPartition)
     vals(schema.length) = p.version
     new GenericInternalRow(vals)
   }
-
-  /** A path-encoded partition value as a typed constant under the table
-    * schema (the Hive null marker decodes to null). */
-  private def partConst(s: String, dt: DataType): Any =
-    GraftCatalog.partConst(s, dt)
 
   override def close(): Unit = reader.close()
 }

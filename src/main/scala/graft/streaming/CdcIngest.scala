@@ -39,12 +39,13 @@ object CdcIngest {
     * distance → DOUBLE (ref: SaveDelta.scala:140-148; FIXTURES.md A4). */
   def parseEnvelope(raw: DataFrame): DataFrame =
     raw
-      .select(from_json(col("value").cast("string"), Schemas.envelopeSchema).as("env"))
-      // P4 + creates only, over ONE reference to the payload: the optimizer
-      // pushes this filter below the parse, where every reference re-parses
-      // the JSON
-      .filter(exists(array(col("env.payload")), p =>
-        p("after")("id").isNotNull && (p("op").isNull || !p("op").isin("u", "d"))))
+      // the parse is a generator's output, so the optimizer cannot push the
+      // P4 + creates-only filter below it (a pushed-down filter re-parses
+      // the JSON): each envelope parses once
+      .select(explode(array(
+        from_json(col("value").cast("string"), Schemas.envelopeSchema))).as("env"))
+      .filter(col("env.payload.after.id").isNotNull &&
+        (col("env.payload.op").isNull || !col("env.payload.op").isin("u", "d")))
       .select(
         col("env.payload.after.id").as("id"),
         col("env.payload.after.id_employee").as("id_employee"),

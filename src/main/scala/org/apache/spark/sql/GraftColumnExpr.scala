@@ -30,4 +30,8 @@ object GraftColumnExpr {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `StructType.asNullable` (scoped `private[spark]`): a file scan reads
+    * every data column as nullable, as Spark's own file sources do. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }

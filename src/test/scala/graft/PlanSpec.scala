@@ -546,4 +546,10 @@ class PlanSpec extends AnyFunSuite {
     assert(Materialize.spreadWidth(32, 8L * Materialize.SpreadBytesPerPart) == 8)
     assert(Materialize.spreadWidth(32, 1L << 30) == 32)
   }
+
+  test("envelope parse: each envelope's JSON is parsed once") {
+    // a keep-filter pushed below the parse would evaluate from_json again
+    val plan = executed(Relational.envelopeParse(spark, sf))
+    assert("from_json\\(".r.findAllIn(plan).size == 1, plan)
+  }
 }

@@ -899,7 +899,10 @@ class TxnTableSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
     val root = tbl()
-    (0 until 12).foreach(i => TxnTable.append(df(i * 10 + 1 to i * 10 + 10), root)) // v0..v11
+    // v0..v11, four files each: past the 32 paths at which a path-list
+    // scan starts a distributed listing job
+    (0 until 12).foreach(i =>
+      TxnTable.append(df(i * 10 + 1 to i * 10 + 10).repartition(4), root))
     assert(TxnTable.foldReport(root) == (Some(10L), 1), "the read must seed from v10")
     val group = s"snapshot-read-${System.nanoTime()}"
     val started = new java.util.concurrent.LinkedBlockingQueue[String]()
@@ -916,6 +919,7 @@ class TxnTableSpec extends AnyFunSuite {
       val below = TxnTable.liveAddsForTest(root, 4L)
       val ddl = TxnTable.showCreate(root, "t")            // schema + config
       val pruned = TxnTable.skippingReport(root, col("id") > 100L)
+      val plan = TxnTable.read(spark, root).queryExecution.sparkPlan
       // a sentinel job in a sibling group: the bus delivers job starts in
       // order, so once it arrives every earlier start has been seen
       sc.setJobGroup(group + "-sentinel", "sentinel")
@@ -923,11 +927,77 @@ class TxnTableSpec extends AnyFunSuite {
       val seen = Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .takeWhile(g => g != null && g != group + "-sentinel").toList
       assert(seen.isEmpty, s"snapshot reads ran ${seen.size} Spark job(s)")
-      assert(below.nonEmpty && below.size < adds.size && ddl.contains("payload") &&
-        pruned._2 > 0 && pruned._1 + pruned._2 == adds.size, (adds.size, below.size, pruned))
+      assert(adds.size >= 40 && below.nonEmpty && below.size < adds.size &&
+        ddl.contains("payload") && pruned._2 > 0 && pruned._1 + pruned._2 == adds.size,
+        (adds.size, below.size, pruned))
+      assert(plan.toString.contains("TxnFileIndex"), plan)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a partitioned snapshot scans as one relation: pruning, temporal values, clone, DVs") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    // 8 partition dirs (p × day; ts follows day) × 2 writer tasks × 3
+    // versions: 48 files under 3 version directories
+    def rows(v: Int): Seq[(Long, String, String, java.sql.Date, java.sql.Timestamp)] = (1 to 40).map { i =>
+      val id = v * 100L + i
+      val day = Seq("2024-01-01", "2024-02-29")((i / 4) % 2)
+      (id, s"v$id", s"p${i % 4}", java.sql.Date.valueOf(day),
+        java.sql.Timestamp.valueOf(s"$day 06:30:00"))
+    }
+    val root = tbl()
+    (0 until 3).foreach(v => TxnTable.appendPartitioned(
+      rows(v).toDF("id", "payload", "p", "day", "ts").repartition(2), root,
+      Seq("p", "day", "ts")))
+    val expected = (0 until 3).flatMap(rows)
+    val adds = TxnTable.liveAddsForTest(root)
+    assert(adds.size >= 40 &&
+      adds.map(_.file.split('/').take(2).mkString("/")).distinct.size == 3, adds.size)
+    def scans(d: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
+      d.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    def read(r: String) = TxnTable.read(spark, r)
+      .as[(Long, String, String, java.sql.Date, java.sql.Timestamp)]
+      .collect().sortBy(_._1).toSeq
+
+    // one relation over every version directory; date and timestamp
+    // partition values decode off the log to the written values
+    assert(scans(TxnTable.read(spark, root)).size == 1)
+    assert(read(root) == expected)
+
+    // a partition equality lists only the matching files and rows
+    val p1 = TxnTable.read(spark, root).filter(col("p") === "p1")
+    val scan = scans(p1).head
+    val listed = scan.relation.location.listFiles(scan.partitionFilters, Nil)
+      .flatMap(_.files).map(_.getPath.toString)
+    assert(listed.size == adds.count(_.partitionValues("p") == "p1") &&
+      listed.forall(_.contains("/p=p1/")), listed)
+    assert(p1.count() == expected.count(_._3 == "p1"))
+    val where = TxnTable.readWhere(spark, root, col("p") === "p1")
+    assert(where.inputFiles.length == listed.size &&
+      where.inputFiles.forall(_.contains("/p=p1/")) && where.count() == p1.count())
+
+    // a shallow clone's absolute re-adds scan as one relation too
+    val clone = tbl() + "/clone"
+    TxnTable.cloneShallow(root, clone)
+    assert(scans(TxnTable.read(spark, clone)).size == 1)
+    assert(read(clone) == expected)
+
+    // deletion vectors keep their marked rows hidden, also under pruning
+    TxnTable.deleteDv(spark, root, col("id") % 3 === 0L)
+    assert(TxnTable.liveAddsForTest(root).exists(_.dv.isDefined))
+    assert(read(root) == expected.filter(_._1 % 3 != 0))
+    assert(TxnTable.read(spark, root).filter(col("p") === "p1").count() ==
+      expected.count(r => r._3 == "p1" && r._1 % 3 != 0))
+    assert(read(clone) == expected)
+    // the DV probe and the row-id bases key on file paths, not on the
+    // part-file names every partition directory of one write shares
+    TxnTable.enableRowTracking(spark, root)
+    val rowIds = TxnTable.readWithRowIds(spark, root).select("_row_id").as[Long].collect()
+    assert(rowIds.length == expected.count(_._1 % 3 != 0) &&
+      rowIds.distinct.length == rowIds.length, rowIds.length)
   }
 }
